@@ -30,8 +30,19 @@ def kmeans_1d_histogram(
 ) -> Tuple[np.ndarray, np.ndarray]:
     """Optimal weighted 1-D k-means on a histogram.
 
+    ``dp[m][j]`` is the least SSE of ``uniq[0..j]`` in ``m + 1``
+    contiguous clusters, minimized over the start ``i`` of the last one.
+    The interval SSE satisfies the quadrangle inequality, so the leftmost
+    optimal start is monotone in ``j`` and each layer is a
+    divide-and-conquer over ``j`` (Wang & Song, Ckmeans.1d.dp, R Journal
+    2011): the middle ``j`` of an open range searches only between the
+    optimal starts of the range's ends. Every open range of a recursion
+    level is solved in one vectorized step, so a layer costs O(n log n)
+    work in O(log n) numpy steps and the whole DP O(k·n·log n). Ties go
+    to the leftmost start.
+
     :param uniq: sorted unique values
-    :param counts: weight (occurrence count) per unique value
+    :param counts: positive weight (occurrence count) per unique value
     :param k: number of clusters
     :returns: (centroid per unique value, cluster id per unique value)
     """
@@ -47,45 +58,70 @@ def kmeans_1d_histogram(
     cwx = np.concatenate([[0.0], np.cumsum(w * x)])
     cwx2 = np.concatenate([[0.0], np.cumsum(w * x * x)])
 
-    def seg_cost(i: np.ndarray, j: int) -> np.ndarray:
-        # weighted SSE of uniq[i..j] about its weighted mean, vectorized in i
-        tw = cw[j + 1] - cw[i]
-        ts = cwx[j + 1] - cwx[i]
-        tq = cwx2[j + 1] - cwx2[i]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            c = tq - np.where(tw > 0, ts * ts / tw, 0.0)
-        return np.maximum(c, 0.0)
+    def sse(i: np.ndarray, e: np.ndarray) -> np.ndarray:
+        # weighted SSE of uniq[i:e] about its weighted mean, elementwise;
+        # weights are positive, so every non-empty range has tw > 0
+        tw = cw[e]
+        tw -= cw[i]
+        ts = cwx[e]
+        ts -= cwx[i]
+        c = cwx2[e]
+        c -= cwx2[i]
+        ts *= ts
+        ts /= tw
+        c -= ts
+        return np.maximum(c, 0.0, out=c)
 
-    INF = np.inf
-    # dp[m][j] = min cost of clustering uniq[0..j] into m+1 clusters
-    dp = np.full((k, n), INF)
-    back = np.zeros((k, n), dtype=np.int64)
-    idx = np.arange(n)
-    dp[0, :] = seg_cost(np.zeros(n, dtype=np.int64), n - 1)  # placeholder
-    for j in range(n):
-        dp[0, j] = seg_cost(np.array([0]), j)[0]
+    # prev[i] = dp[m-1][i-1]: the cost of uniq[0:i] in m clusters
+    prev = np.full(n + 1, np.inf)
+    prev[1:] = sse(np.zeros(n, dtype=np.int64), np.arange(1, n + 1))
+    back = np.zeros((k, n), dtype=np.int32)
     for m in range(1, k):
-        for j in range(m, n):
-            starts = idx[m : j + 1]
-            cand = dp[m - 1, starts - 1] + seg_cost(starts, j)
-            best = int(np.argmin(cand))
-            dp[m, j] = cand[best]
-            back[m, j] = starts[best]
+        # only j in [m, n - k + m] can lie on an optimal path; the last
+        # layer needs j = n - 1 alone
+        lo = np.array([m if m < k - 1 else n - 1])
+        hi = np.array([n - k + m])
+        opt_lo, opt_hi = np.array([m]), hi
+        cur = np.full(n + 1, np.inf)
+        while lo.size:
+            mid = (lo + hi) // 2
+            last = np.minimum(opt_hi, mid)
+            size = last - opt_lo + 1
+            first = np.cumsum(size) - size
+            # candidate starts opt_lo..last of every range, laid end to end
+            starts = np.ones(first[-1] + size[-1], dtype=np.int64)
+            starts[first] = opt_lo
+            starts[first[1:]] -= last[:-1]
+            np.cumsum(starts, out=starts)
+            cand = sse(starts, np.repeat(mid + 1, size))
+            cand += prev[starts]
+            best = np.minimum.reduceat(cand, first)
+            hit = np.flatnonzero(cand == np.repeat(best, size))
+            opt = starts[hit[np.searchsorted(hit, first)]]
+            cur[mid + 1] = best
+            back[m, mid] = opt
+            # left halves keep [opt_lo, opt], right halves [opt, opt_hi]
+            left = mid > lo
+            right = mid < hi
+            lo = np.concatenate([lo[left], mid[right] + 1])
+            hi = np.concatenate([mid[left] - 1, hi[right]])
+            opt_lo, opt_hi = (
+                np.concatenate([opt_lo[left], opt[right]]),
+                np.concatenate([opt[left], opt_hi[right]]),
+            )
+        prev = cur
 
-    # recover cluster boundaries
-    labels = np.zeros(n, dtype=np.int64)
-    j = n - 1
+    # recover cluster boundaries: cluster m is uniq[bounds[m]:bounds[m + 1]]
+    bounds = [n]
     for m in range(k - 1, 0, -1):
-        i = back[m, j]
-        labels[i : j + 1] = m
-        j = i - 1
-    labels[: j + 1] = 0
+        bounds.append(int(back[m, bounds[-1] - 1]))
+    bounds.append(0)
+    bounds.reverse()
+    labels = np.repeat(np.arange(k, dtype=np.int64), np.diff(bounds))
 
     centroids = np.zeros(n)
-    for m in range(k):
-        sel = labels == m
-        if sel.any():
-            centroids[sel] = np.average(x[sel], weights=w[sel])
+    for s, e in zip(bounds[:-1], bounds[1:]):
+        centroids[s:e] = np.average(x[s:e], weights=w[s:e])
     return centroids, labels
 
 

@@ -77,7 +77,21 @@ class RolxOracle:
 
     def select_model(self, features: pd.DataFrame) -> FactorTuple:
         """MDL grid search over (n_roles, n_bits); first argmin wins."""
-        V = features.values
+        enc_costs, err_costs, models = self.cost_grid(features.values)
+        costs = self.rescale_costs(enc_costs) + self.rescale_costs(err_costs)
+        best = np.nanmin(costs)
+        r, b = np.argwhere(costs == best)[0]
+        return models[(int(r), int(b))]
+
+    def cost_grid(
+        self, V: np.ndarray
+    ) -> Tuple[np.ndarray, np.ndarray, Dict[Tuple[int, int], FactorTuple]]:
+        """Encoding and error costs of every feasible (n_roles, n_bits) cell.
+
+        The NMF is deterministic, so each role count is factorized once and
+        that factor is encoded at every bit width. Cells whose bin count
+        exceeds a factor's size stay nan and have no model.
+        """
         max_bits_idx = self.max_bits + 1
         max_roles_idx = min(min(V.shape), self.max_roles) + 1
 
@@ -86,25 +100,27 @@ class RolxOracle:
         models: Dict[Tuple[int, int], FactorTuple] = {}
 
         for roles in range(self.min_roles, max_roles_idx):
+            G, F = nmf(np.asarray(V, dtype=np.float64), roles)
             for bits in range(self.min_bits, max_bits_idx):
                 try:
-                    model = self.encoded_factors(V, roles, bits)
+                    model = self.encode_factors(G, F, bits)
                     e_cost, r_cost = description_length_costs(V, model)
                 except ValueError:
                     continue  # n_bins too large for the sample count
                 enc_costs[roles, bits] = e_cost
                 err_costs[roles, bits] = r_cost
                 models[(roles, bits)] = model
-
-        costs = self.rescale_costs(enc_costs) + self.rescale_costs(err_costs)
-        best = np.nanmin(costs)
-        r, b = np.argwhere(costs == best)[0]
-        return models[(int(r), int(b))]
+        return enc_costs, err_costs, models
 
     @staticmethod
     def encoded_factors(V: np.ndarray, n_roles: int, n_bits: int) -> FactorTuple:
-        n_bins = int(2**n_bits)
         G, F = nmf(np.asarray(V, dtype=np.float64), n_roles)
+        return RolxOracle.encode_factors(G, F, n_bits)
+
+    @staticmethod
+    def encode_factors(G: np.ndarray, F: np.ndarray, n_bits: int) -> FactorTuple:
+        """Quantize both NMF factors to ``2**n_bits`` levels."""
+        n_bins = int(2**n_bits)
         return encode(G, n_bins), encode(F, n_bins)
 
     @staticmethod

@@ -49,7 +49,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local mode: the driver heap IS the executor heap — size it to the
         # host (32 concurrent tasks thrash an 8g heap with GC)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -60,6 +63,20 @@ def get_spark(
     if prewarm:
         prewarm_python_workers(spark, cores)
     return spark
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap when $SPARK_GRAFT_DRIVER_MEM is unset.
+
+    Half the host's physical memory (``phys_bytes``, read with
+    ``os.sysconf`` by default) in whole GiB, at least 1g and at most 48g:
+    in local mode the Python workers and the JVM's off-heap memory need
+    the other half, and a heap larger than the host only defers the
+    failure from start-up to the first big job.
+    """
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(max(phys_bytes // 2 // 2**30, 1), 48)}g"
 
 
 def prewarm_python_workers(spark: SparkSession, n: int | None = None) -> None:

@@ -6,11 +6,18 @@ invariants (shapes, non-negativity, unique-value caps, MDL picking 2
 roles on the seeded 20x30 matrix) are the parity contract.
 """
 
+import itertools
+import time
+
 import numpy as np
 import pandas as pd
 import pytest
 
-from graphrole_spark.oracle.mdl import encoding_cost, error_cost
+from graphrole_spark.oracle.mdl import (
+    description_length_costs,
+    encoding_cost,
+    error_cost,
+)
 from graphrole_spark.oracle.nmf import nmf
 from graphrole_spark.oracle.quantize import encode, kmeans_1d_histogram
 from graphrole_spark.oracle.rolx import RolxOracle
@@ -70,6 +77,155 @@ def test_kmeans_1d_optimality_small():
     np.testing.assert_allclose(centroids[4], 10.0)
 
 
+def quadratic_kmeans_1d(uniq, counts, k):
+    """The O(k·n²) exact DP the quantizer used to run: every start of
+    every (layer, end) pair is scanned, ties to the leftmost start."""
+    n = len(uniq)
+    if n == 0:
+        return np.zeros(0), np.zeros(0, dtype=np.int64)
+    if k >= n:
+        return uniq.astype(np.float64).copy(), np.arange(n, dtype=np.int64)
+    w = counts.astype(np.float64)
+    x = uniq.astype(np.float64)
+    cw = np.concatenate([[0.0], np.cumsum(w)])
+    cwx = np.concatenate([[0.0], np.cumsum(w * x)])
+    cwx2 = np.concatenate([[0.0], np.cumsum(w * x * x)])
+
+    def seg_cost(i, j):
+        tw = cw[j + 1] - cw[i]
+        ts = cwx[j + 1] - cwx[i]
+        tq = cwx2[j + 1] - cwx2[i]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            c = tq - np.where(tw > 0, ts * ts / tw, 0.0)
+        return np.maximum(c, 0.0)
+
+    dp = np.full((k, n), np.inf)
+    back = np.zeros((k, n), dtype=np.int64)
+    idx = np.arange(n)
+    for j in range(n):
+        dp[0, j] = seg_cost(np.array([0]), j)[0]
+    for m in range(1, k):
+        for j in range(m, n):
+            starts = idx[m : j + 1]
+            cand = dp[m - 1, starts - 1] + seg_cost(starts, j)
+            best = int(np.argmin(cand))
+            dp[m, j] = cand[best]
+            back[m, j] = starts[best]
+    labels = np.zeros(n, dtype=np.int64)
+    j = n - 1
+    for m in range(k - 1, 0, -1):
+        i = back[m, j]
+        labels[i : j + 1] = m
+        j = i - 1
+    centroids = np.zeros(n)
+    for m in range(k):
+        sel = labels == m
+        if sel.any():
+            centroids[sel] = np.average(x[sel], weights=w[sel])
+    return centroids, labels
+
+
+def weighted_sse(uniq, counts, centroids):
+    return float(np.sum(counts * (uniq - centroids) ** 2))
+
+
+def test_kmeans_1d_exhaustive_small():
+    # every contiguous partition of n <= 9 sorted values into k clusters
+    rng = np.random.RandomState(3)
+    for n in range(1, 10):
+        uniq = np.sort(rng.choice(np.arange(100), n, replace=False)) / 7.0
+        counts = rng.randint(1, 6, n)
+        for k in range(1, n + 2):
+            centroids, labels = kmeans_1d_histogram(uniq, counts, k)
+            n_clusters = min(k, n)
+            assert labels.tolist() == sorted(labels.tolist())
+            assert len(np.unique(labels)) == n_clusters
+            best = np.inf
+            for cuts in itertools.combinations(range(1, n), n_clusters - 1):
+                parts = np.split(np.arange(n), cuts)
+                sse = sum(
+                    weighted_sse(
+                        uniq[p], counts[p], np.average(uniq[p], weights=counts[p])
+                    )
+                    for p in parts
+                )
+                best = min(best, sse)
+            got = weighted_sse(uniq, counts, centroids)
+            assert got == pytest.approx(best, rel=1e-12, abs=1e-12)
+
+
+def _random_histograms():
+    rng = np.random.RandomState(11)
+    for trial in range(40):
+        size = rng.randint(1, 200)
+        kind = trial % 4
+        if kind == 0:  # continuous values, each seen once
+            sample = rng.rand(size)
+        elif kind == 1:  # few distinct integers, many repeats
+            sample = rng.randint(0, 25, size).astype(float)
+        elif kind == 2:  # heavy tail rounded to two decimals
+            sample = np.round(rng.exponential(1.0, size), 2)
+        else:  # multiples of 0.1: sums of the cost terms round
+            sample = rng.randint(0, 40, size) * 0.1
+        uniq, counts = np.unique(sample, return_counts=True)
+        if trial % 3 == 0:  # large integer weights
+            counts = rng.randint(1, 10_000, len(uniq))
+        yield uniq, counts, rng
+
+
+def test_kmeans_1d_matches_quadratic_dp():
+    cases = [
+        (np.zeros(0), np.zeros(0, dtype=np.int64), 3),  # n = 0
+        (np.array([2.5]), np.array([7]), 1),  # constant input
+        (np.array([2.5]), np.array([7]), 4),
+        (np.array([0.0, 1.0, 2.0]), np.array([1, 1, 1]), 2),  # exact tie
+        (np.arange(10.0), np.ones(10, dtype=np.int64), 10),  # k == n
+        (np.arange(10.0), np.ones(10, dtype=np.int64), 12),  # k > n
+    ]
+    for uniq, counts, rng in _random_histograms():
+        n = len(uniq)
+        for k in {1, 2, int(rng.randint(1, n + 2)), max(n - 1, 1), n}:
+            cases.append((uniq, counts, k))
+    for uniq, counts, k in cases:
+        want_c, want_l = quadratic_kmeans_1d(uniq, counts, k)
+        got_c, got_l = kmeans_1d_histogram(uniq, counts, k)
+        np.testing.assert_array_equal(got_l, want_l)
+        np.testing.assert_allclose(got_c, want_c, rtol=1e-12, atol=0)
+        assert weighted_sse(uniq, counts, got_c) == pytest.approx(
+            weighted_sse(uniq, counts, want_c), rel=1e-12, abs=0
+        )
+
+
+def test_kmeans_1d_time_budget():
+    rng = np.random.RandomState(5)
+    uniq = np.cumsum(rng.rand(100_000) + 1e-3)  # strictly increasing
+    counts = rng.randint(1, 50, len(uniq))
+    # CPU time of this process, best of up to three runs: a co-tenant burst
+    # on the host stretches wall time but not the DP's own work
+    best = np.inf
+    for _ in range(3):
+        t0 = time.process_time()
+        centroids, labels = kmeans_1d_histogram(uniq, counts, 64)
+        best = min(best, time.process_time() - t0)
+        if best < 10.0:
+            break
+    assert best < 10.0
+    assert len(np.unique(labels)) == 64
+    assert len(np.unique(centroids)) == 64
+
+
+def test_encode_contract_on_repeated_values():
+    rng = np.random.RandomState(2)
+    X = np.round(rng.exponential(1.0, (300, 7)), 2)
+    n_distinct = len(np.unique(X))
+    for n_bins in (1, 2, 8, 64, n_distinct, n_distinct + 5, X.size):
+        enc = encode(X, n_bins)
+        assert enc.shape == X.shape
+        assert len(np.unique(enc)) <= n_bins
+    with pytest.raises(ValueError):
+        encode(X, X.size + 1)
+
+
 def test_encoding_cost_golden():
     # reference: tests/test_roles/test_description_length.py:17-24
     G = np.array([[1, 2, 3], [1, 2, 4]])
@@ -114,6 +270,32 @@ def test_model_selection_picks_two_roles(features):
     G, F = ext.select_model(features)
     assert G.shape[1] == F.shape[0]
     assert G.shape[1] == 2
+
+
+def test_cost_grid_matches_per_cell_factorization(features):
+    # one NMF per role count must give the grid that factorizing every
+    # (roles, bits) cell afresh gives, and the same MDL choice
+    V = features.values
+    for ranges, chosen in [((None, None), (8, 2)), (((2, 5), (2, 5)), (2, 2))]:
+        ext = RolxOracle(n_role_range=ranges[0], n_bit_range=ranges[1])
+        enc, err, models = ext.cost_grid(V)
+        want_enc = np.full(enc.shape, np.nan)
+        want_err = np.full(err.shape, np.nan)
+        for roles in range(ext.min_roles, enc.shape[0]):
+            for bits in range(ext.min_bits, enc.shape[1]):
+                try:
+                    model = RolxOracle.encoded_factors(V, roles, bits)
+                except ValueError:
+                    assert (roles, bits) not in models
+                    continue
+                want_enc[roles, bits], want_err[roles, bits] = (
+                    description_length_costs(V, model)
+                )
+        np.testing.assert_array_equal(enc, want_enc)
+        np.testing.assert_array_equal(err, want_err)
+        G, F = ext.select_model(features)
+        np.testing.assert_array_equal(G, models[chosen][0])
+        np.testing.assert_array_equal(F, models[chosen][1])
 
 
 def test_encoded_factors_grid(features):
