@@ -423,6 +423,18 @@ def q_vocab_coverage(spark, sf_dir):
 # graph seed operators (M2) over derived relations
 # --------------------------------------------------------------------------
 
+def _node_label(even_prefix: str, odd_prefix: str):
+    """Display string of a packed long node key (``key*2`` for the even
+    namespace, ``key*2+1`` for the odd one): the prefix plus
+    ``node >> 1``, exact over the whole long range (a float division is
+    exact only below 2^53)."""
+    node = F.col("node")
+    return F.concat(
+        F.when(node % 2 == 0, F.lit(even_prefix)).otherwise(F.lit(odd_prefix)),
+        F.shiftright(node, 1).cast("string"),
+    ).alias("node")
+
+
 def q_degree_undirected(spark, sf_dir):
     """Undirected weighted degree (reference L1) over the part-supplier
     shipment graph -- one symmetrized edge aggregate."""
@@ -436,16 +448,8 @@ def q_degree_undirected(spark, sf_dir):
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
         F.col("l_quantity").alias("weight"),
     )
-    node_str = F.when(
-        F.col("node") % 2 == 0,
-        F.concat(F.lit("p"), (F.col("node") / 2).cast("long").cast("string")),
-    ).otherwise(
-        F.concat(
-            F.lit("s"), ((F.col("node") - 1) / 2).cast("long").cast("string")
-        )
-    )
     return degree_features(edges, directed=False, nodes=node_set(edges)).select(
-        node_str.alias("node"), F.round("degree", 6).alias("degree")
+        _node_label("p", "s"), F.round("degree", 6).alias("degree")
     )
 
 
@@ -463,16 +467,8 @@ def q_degree_directed(spark, sf_dir):
         (F.col("o_orderkey") * 2 + 1).alias("dst"),
         F.col("o_totalprice").alias("weight"),
     )
-    node_str = F.when(
-        F.col("node") % 2 == 0,
-        F.concat(F.lit("c"), (F.col("node") / 2).cast("long").cast("string")),
-    ).otherwise(
-        F.concat(
-            F.lit("o"), ((F.col("node") - 1) / 2).cast("long").cast("string")
-        )
-    )
     return degree_features(edges, directed=True, nodes=node_set(edges)).select(
-        node_str.alias("node"),
+        _node_label("c", "o"),
         F.round("in_degree", 6).alias("in_degree"),
         F.round("out_degree", 6).alias("out_degree"),
         F.round("total_degree", 6).alias("total_degree"),
@@ -702,16 +698,8 @@ def q_egonet(spark, sf_dir):
         F.lit(1.0).alias("weight"),
     )
     out = egonet_features(edges, directed=True, nodes=node_set(edges))
-    node_str = F.when(
-        F.col("node") % 2 == 0,
-        F.concat(F.lit("p"), (F.col("node") / 2).cast("long").cast("string")),
-    ).otherwise(
-        F.concat(
-            F.lit("s"), ((F.col("node") - 1) / 2).cast("long").cast("string")
-        )
-    )
     return out.select(
-        node_str.alias("node"),
+        _node_label("p", "s"),
         F.round("internal_edges", 6).alias("internal_edges"),
         F.round("external_edges", 6).alias("external_edges"),
     )

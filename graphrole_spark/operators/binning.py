@@ -21,8 +21,6 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from graphrole_spark.oracle.binning import bin_boundaries
-
 
 def melt_histogram(features: DataFrame, value_cols: Sequence[str]) -> Dict[str, tuple]:
     """Per-feature (unique values, counts) via a single stack+groupBy pass.
@@ -197,26 +195,3 @@ def bin_expression(col_name: str, boundaries: np.ndarray) -> Column:
         )
 
     return tree(0, n - 1)
-
-
-def binned_columns_from_hists(
-    features: DataFrame, value_cols: Sequence[str], bounds: Dict[str, np.ndarray]
-) -> DataFrame:
-    """Replace each value column by its bin id, given precomputed
-    per-feature boundaries (JVM-side only)."""
-    return features.select(
-        *[c for c in features.columns if c not in value_cols],
-        *[bin_expression(c, bounds[c]).alias(c) for c in value_cols],
-    )
-
-
-def binned_columns(
-    features: DataFrame, value_cols: Sequence[str], frac: float = 0.5
-) -> tuple[DataFrame, Dict[str, np.ndarray]]:
-    """Return (frame with each value col replaced by its bin id, the
-    per-feature boundaries used)."""
-    hists = melt_histogram(features, value_cols)
-    bounds = {
-        c: bin_boundaries(hists[c][0], hists[c][1], frac=frac) for c in value_cols
-    }
-    return binned_columns_from_hists(features, value_cols, bounds), bounds

@@ -1,48 +1,19 @@
-"""Distributed feature pruning: binning + Chebyshev grouping.
+"""Distributed feature pruning: pairwise Chebyshev distances.
 
 The pairwise Chebyshev distances between binned feature columns reduce
-to ONE aggregation job with F(F-1)/2 ``max(abs(ci - cj))`` expressions
-(feature count is tens — the row dimension, which is huge, is what gets
-distributed). Feature-graph components + oldest-feature selection then
-run on the driver over that tiny distance table, reusing the oracle's
-exact logic (SURVEY.md §2.4 P2-P5).
+to ONE Arrow reduction pass: every partition bins its rows against the
+driver-computed log-bin boundaries and keeps the running max |Δbin| per
+feature pair (feature count is tens — the row dimension, which is huge,
+is what gets distributed). Feature-graph components + oldest-feature
+selection then run on the driver over that tiny distance table, reusing
+the oracle's exact logic (SURVEY.md §2.4 P2-P5).
 """
 
 from __future__ import annotations
 
-import itertools as it
-from typing import Dict, List, Mapping, Sequence
+from typing import Dict, Mapping, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from graphrole_spark.operators.binning import binned_columns
-from graphrole_spark.oracle.prune import group_feature_names, select_features_to_drop
-
-
-def chebyshev_distances(
-    binned: DataFrame,
-    value_cols: Sequence[str],
-    pairs: Sequence[tuple] | None = None,
-) -> Dict[tuple, float]:
-    """All pairwise max-|Δbin| distances in a single aggregation pass.
-
-    ``pairs`` restricts the computation (the recursion passes only pairs
-    that touch a newly introduced column — old-old distances are
-    immutable and cached across generations)."""
-    if pairs is None:
-        pairs = list(it.combinations(value_cols, 2))
-    if not pairs:
-        return {}
-    aggs = [
-        F.max(F.abs(F.col(a) - F.col(b))).alias(f"d_{i}")
-        for i, (a, b) in enumerate(pairs)
-    ]
-    row = binned.agg(*aggs).collect()[0]
-    return {
-        pair: float(row[f"d_{i}"]) if row[f"d_{i}"] is not None else 0.0
-        for i, pair in enumerate(pairs)
-    }
 
 
 def chebyshev_distances_arrow(
@@ -100,19 +71,3 @@ def chebyshev_distances_arrow(
         return {pair: 0.0 for pair in pairs}
     maxes = np.max(np.array([r["d"] for r in rows]), axis=0)
     return {pair: float(maxes[k]) for k, pair in enumerate(pairs)}
-
-
-def prune_features_spark(
-    features: DataFrame,
-    value_cols: Sequence[str],
-    generation_dict: Mapping[int, Mapping[str, object]],
-    feature_group_thresh: float,
-    frac: float = 0.5,
-) -> List[str]:
-    """Names of redundant feature columns to drop (reference semantics:
-    per connected component of near-duplicate features keep the earliest
-    generation / lexicographically smallest)."""
-    binned, _ = binned_columns(features, value_cols, frac=frac)
-    dists = chebyshev_distances(binned, value_cols)
-    groups = group_feature_names(list(value_cols), dists, feature_group_thresh)
-    return select_features_to_drop(groups, generation_dict)

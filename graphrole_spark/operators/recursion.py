@@ -56,6 +56,9 @@ from graphrole_spark.operators.model import FeatureModel
 from graphrole_spark.oracle.prune import group_feature_names, select_features_to_drop
 
 _CHAIN_AGGS = {"sum", "mean", "avg", "max", "min"}
+# bounded-driver guarantee: never collect more than this many histogram
+# rows per feature in one chunk (SURVEY §7 risk 2)
+HISTOGRAM_CAP = 1_000_000
 
 
 class RecursiveFeatureExtractor:
@@ -105,13 +108,11 @@ class RecursiveFeatureExtractor:
         attributes_include: Optional[Sequence[str]] = None,
         attributes_exclude: Optional[Sequence[str]] = None,
         checkpoint_dir: Optional[str] = None,
-        binning_frac: float = 0.5,
         seed_frame: Optional[DataFrame] = None,
         chain_keys: Optional[Tuple[str, str]] = None,
         chain_block_col: Optional[str] = None,
         chain_own_col: Optional[str] = None,
         prune: bool = True,
-        histogram_cap: int = 1_000_000,
         model: Optional[FeatureModel] = None,
     ) -> None:
         # transform mode: a frozen FeatureModel replays a fitted run's
@@ -180,13 +181,9 @@ class RecursiveFeatureExtractor:
         self.attributes_include = attributes_include
         self.attributes_exclude = attributes_exclude
         self.checkpoint_dir = checkpoint_dir
-        self.binning_frac = binning_frac
         self.seed_frame = seed_frame
         self.prune = prune
         self.model = model
-        # bounded-driver guarantee: never collect more than this many
-        # histogram rows per feature in one chunk (SURVEY §7 risk 2)
-        self.histogram_cap = int(histogram_cap)
 
         self.generation_count = 0
         self._generation_dict: Dict[int, Dict[str, None]] = {}
@@ -349,84 +346,89 @@ class RecursiveFeatureExtractor:
         return ctx()
 
     def _update(self, new_frame: Optional[DataFrame], gen: int) -> List[str]:
+        """One generation: aggregate, decide what to keep, carry forward.
+
+        The retained set comes from the frozen model (replay), from
+        :meth:`_measure` (pruned fit) or is everything (``prune=False``);
+        the bookkeeping, caching and lineage below are shared by all
+        three."""
         t0 = time.time()
         combined, new_cols = self._combine(new_frame, gen)
+        value_cols = self._active_cols + [c for c in new_cols if c not in self._active_cols] \
+            if gen > 0 else new_cols
+        measured = self.model is None and self.prune
+        # one cache rule: persist a generation that is measured (its
+        # statistics actions read it twice and materialize it), any
+        # edges-mode generation (the state is referenced twice per
+        # generation — concat base + neighbor agg — so persisting stops
+        # the lazy plan doubling) and any checkpointed one. Otherwise
+        # chain-mode replay and prune=False stay pure column selects: the
+        # whole recursion is one lazy plan with zero driver actions.
+        if measured or self.checkpoint_dir or not self.chain_keys:
+            combined = combined.persist()
+        entry = {"generation": gen, "row_count": None}
         if self.model is not None:
             # frozen-model replay: retained set comes from the fit, the
-            # generation stays a lazy projection (chain mode: zero
-            # driver actions across the whole recursion)
+            # generation stays a lazy projection
             retained = self.model.check_generation(gen, new_cols)
             if retained is None:
+                combined.unpersist()
                 return []
-            self._generation_dict[gen] = dict.fromkeys(retained)
-            self._active_cols = (
-                list(new_cols) if gen == 0 else self._active_cols + list(new_cols)
-            )
-            self._retained_order.extend(retained)
-            if self.checkpoint_dir:
-                self._state = self._checkpoint(combined.persist(), gen)
-            elif not self.chain_keys:
-                self._state = combined.persist()
-            else:
-                self._state = combined
-            self._lineage.append(
-                {
-                    "generation": gen,
-                    "retained": retained,
-                    "dropped": sorted(set(new_cols) - set(retained)),
-                    "row_count": None,
-                    "n_features": len(self._active_cols),
-                    "seconds": round(time.time() - t0, 3),
-                    "rows_per_sec": None,
-                    "mode": "transform",
-                }
-            )
-            if self.checkpoint_dir:
-                self._write_lineage(done=False)
-            return retained
-        if not self.prune:
+            to_drop = sorted(set(new_cols) - set(retained))
+            entry["mode"] = "transform"
+        elif not self.prune:
             # no pruning: nothing to measure, nothing to collect — the
             # generation is a lazy projection (chain mode: pure window
             # expressions, still zero exchanges); retain everything
-            retained = sorted(new_cols)
-            self._generation_dict[gen] = dict.fromkeys(retained)
-            self._active_cols = (
-                list(new_cols) if gen == 0 else self._active_cols + list(new_cols)
-            )
-            self._retained_order.extend(retained)
-            if self.checkpoint_dir:
-                self._state = self._checkpoint(combined.persist(), gen)
-            elif not self.chain_keys:
-                # edges mode references the state twice per generation
-                # (concat base + neighbor agg) — persist to stop the
-                # lazy plan doubling per generation; chain mode is pure
-                # column selects and stays fully lazy. (Earlier caches
-                # are still lazy here — nothing materialized them — so
-                # they stay registered and Spark's LRU evicts as needed.)
-                self._state = combined.persist()
-            else:
-                self._state = combined
-            self._lineage.append(
-                {
-                    "generation": gen,
-                    "retained": retained,
-                    "dropped": [],
-                    "row_count": None,
-                    "n_features": len(self._active_cols),
-                    "seconds": round(time.time() - t0, 3),
-                    "rows_per_sec": None,
-                }
-            )
-            if self.checkpoint_dir:
-                self._write_lineage(done=False)
-            return retained
-        combined = combined.persist()
-        value_cols = self._active_cols + [c for c in new_cols if c not in self._active_cols] \
-            if gen > 0 else new_cols
+            retained, to_drop = sorted(new_cols), []
+        else:
+            to_drop = self._measure(combined, value_cols, gen, entry)
+            retained = sorted(set(new_cols) - set(to_drop))
 
+        self._generation_dict[gen] = dict.fromkeys(retained)
+        self._active_cols = [c for c in value_cols if c not in to_drop]
+        self._retained_order.extend(retained)
+
+        prev_state = self._state
+        if self.checkpoint_dir:
+            self._state = self._checkpoint(combined, gen)
+            entry["checkpoint_partitions"] = len(self._last_ckpt_partitions)
+            entry["partition_rows"] = self._last_ckpt_partitions
+        else:
+            self._state = combined
+            # finalize reads only the LAST state (carry-forward columns),
+            # so the previous cache can go — but only once this
+            # generation's actions have materialized the new one (an
+            # unmeasured generation is still lazy: its earlier caches
+            # stay registered and Spark's LRU evicts as needed)
+            if measured and prev_state is not None:
+                prev_state.unpersist()
+
+        elapsed = time.time() - t0
+        row_count = entry["row_count"]
+        entry.update(
+            retained=retained,
+            dropped=sorted(to_drop),
+            n_features=len(value_cols),
+            seconds=round(elapsed, 3),
+            rows_per_sec=None if row_count is None
+            else round(row_count / max(elapsed, 1e-9), 1),
+        )
+        self._lineage.append(entry)
+        if self.checkpoint_dir:
+            self._write_lineage(done=False)
+        return retained
+
+    def _measure(
+        self, combined: DataFrame, value_cols: List[str], gen: int, entry: dict
+    ) -> List[str]:
+        """Pruning statistics of one generation over the persisted
+        ``combined`` frame: log-bin boundaries, pairwise Chebyshev
+        distances, feature groups. Returns the names to drop and records
+        the row count, timings and first-seen boundaries in ``entry``."""
         # one melt+histogram pass over the NEW columns only: bin
         # boundaries AND the row count (old columns come from the cache).
-        # The collect is CAPPED at histogram_cap rows per feature; a
+        # The collect is CAPPED at HISTOGRAM_CAP rows per feature; a
         # high-cardinality feature falls back to the exact chunked
         # boundary search (driver memory stays bounded at any scale)
         t_hist = time.time()
@@ -434,19 +436,16 @@ class RecursiveFeatureExtractor:
         stats_frame = self._own_rows(combined)
         if to_melt:
             with self._tiny_query_conf():
-                complete, truncated = capped_melt(
-                    stats_frame, to_melt, self.histogram_cap
-                )
+                complete, truncated = capped_melt(stats_frame, to_melt, HISTOGRAM_CAP)
             for c, (uniq, counts) in complete.items():
                 self._bounds_cache[c] = (
-                    bin_boundaries(uniq, counts, frac=self.binning_frac),
+                    bin_boundaries(uniq, counts),
                     int(counts.sum()) if len(counts) else 0,
                 )
             for c, (uniq, counts, total) in truncated.items():
                 self._bounds_cache[c] = (
                     chunked_bin_boundaries(
-                        stats_frame, c, total, (uniq, counts),
-                        frac=self.binning_frac, cap=self.histogram_cap,
+                        stats_frame, c, total, (uniq, counts), cap=HISTOGRAM_CAP
                     ),
                     total,
                 )
@@ -469,47 +468,18 @@ class RecursiveFeatureExtractor:
         dists = {p: self._dist_cache[frozenset(p)] for p in pairs}
         t_cheb = time.time() - t_cheb
         groups = group_feature_names(value_cols, dists, gen)
-        to_drop = select_features_to_drop(groups, self._generation_dict)
-
-        retained = sorted(set(new_cols) - set(to_drop))
-        self._generation_dict[gen] = dict.fromkeys(retained)
-        self._active_cols = [c for c in value_cols if c not in to_drop]
-        self._retained_order.extend(retained)
-
-        prev_state = self._state
-        if self.checkpoint_dir:
-            self._state = self._checkpoint(combined, gen)
-        else:
-            self._state = combined
-            # the previous generation's cache is no longer referenced —
-            # finalize reads only the LAST state (carry-forward columns)
-            if prev_state is not None:
-                prev_state.unpersist()
-
-        entry = {
-            "generation": gen,
-            "retained": retained,
-            "dropped": sorted(to_drop),
-            "row_count": row_count,
-            "n_features": len(value_cols),
-            "histogram_sec": round(t_hist, 3),
-            "chebyshev_sec": round(t_cheb, 3),
-            "seconds": round(time.time() - t0, 3),
-            "rows_per_sec": round(row_count / max(time.time() - t0, 1e-9), 1),
+        entry.update(
+            row_count=row_count,
+            histogram_sec=round(t_hist, 3),
+            chebyshev_sec=round(t_cheb, 3),
             # audit record: the frozen log-bin boundaries the pruning
             # decisions for first-seen columns were measured with (lets
             # FeatureModel.from_checkpoint reconstruct the full model)
-            "boundaries": {
+            boundaries={
                 c: [float(x) for x in self._bounds_cache[c][0]] for c in to_melt
             },
-        }
-        if self.checkpoint_dir and getattr(self, "_last_ckpt_partitions", None):
-            entry["checkpoint_partitions"] = len(self._last_ckpt_partitions)
-            entry["partition_rows"] = self._last_ckpt_partitions
-        self._lineage.append(entry)
-        if self.checkpoint_dir:
-            self._write_lineage(done=False)
-        return retained
+        )
+        return select_features_to_drop(groups, self._generation_dict)
 
     def _finalize(self) -> DataFrame:
         """Final frame = ONE column projection of the last generation's

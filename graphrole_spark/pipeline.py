@@ -3,7 +3,7 @@
 Reimagines ReFeX's graph neighborhoods as temporal neighborhoods over
 multi-turn transcripts (BASELINE.json north_star): each turn is an
 entity, its neighbors are the adjacent turns within the conversation
-(lag-k), and every feature is computed point-in-time — a cutoff
+(lag-1), and every feature is computed point-in-time — a cutoff
 timestamp bounds the scan itself, so no feature can see a later turn
 (zero temporal leakage by construction, property-tested).
 
@@ -13,9 +13,9 @@ Scale design:
   degree/internal/external drop out of per-conversation position
   arithmetic, so generation 0 costs one window pass instead of the
   generic 2-hop egonet join;
-* all windows partition by ``conv_id``; the recursion's neighbor join
-  keys are ``conv_id#turn_idx`` strings, hash-balanced across the
-  cluster; with lag-1 adjacency every entity has ≤ 2k neighbors, so no
+* all windows partition by ``conv_id``; the recursion's neighbor
+  aggregates are ``lag``/``lead`` windows over the same partitioning
+  (no join); with lag-1 adjacency every entity has ≤ 2 neighbors, so no
   skew amplification regardless of conversation length;
 * attribute seeds (text length, tool/role indicators, session position)
   ride along as ``attribute_*`` columns through the standard pruning.
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphrole_spark.operators.recursion import RecursiveFeatureExtractor
-from graphrole_spark.sources.transcripts import derive_edges, entity_col
+from graphrole_spark.sources.transcripts import entity_col
 from graphrole_spark.temporal.ops import sessionize
 
 DEFAULT_SESSION_GAP = 1800.0
@@ -58,41 +58,26 @@ def _attribute_exprs() -> list:
     return [(name, expr.alias(f"attribute_{name}")) for name, expr in pairs]
 
 
-def transcript_attribute_features(transcripts: DataFrame) -> DataFrame:
-    """Standalone attribute frame (kept for API parity; the flagship path
-    fuses these expressions into the seed select, see
-    :func:`chain_seed_features`)."""
-    t = sessionize(transcripts, ["conv_id"], "ts", DEFAULT_SESSION_GAP)
-    return t.select("conv_id", "turn_idx", *[e for _, e in _attribute_exprs()])
-
-
 def chain_seed_features(
     transcripts: DataFrame,
-    lag_k: int = 1,
     with_attributes: bool = True,
     attributes_include: Optional[Sequence[str]] = None,
     attributes_exclude: Optional[Sequence[str]] = None,
 ) -> DataFrame:
-    """Generation-0 features for the lag-k chain graph, in closed form.
+    """Generation-0 features for the lag-1 chain graph, in closed form.
 
-    For the undirected chain with lag-k adjacency, position i of an
-    n-turn conversation has:
+    For the undirected chain, position i of an n-turn conversation has:
 
-    * ``degree(i)      = min(i, k) + min(n-1-i, k)``
-    * ``internal_edges(i)`` = number of chain edges between members of
-      ego(i) = positions [i-k, i+k]: every pair within distance k — for
-      k=1 this equals degree(i); general k: sum over members of forward
-      links staying inside the ego interval;
-    * ``external_edges(i)`` = edges with exactly one endpoint in ego(i).
+    * ``degree(i)      = [i > 0] + [i < n-1]``
+    * ``internal_edges(i)`` = chain edges between members of ego(i) =
+      positions [i-1, i+1] — equal to degree(i);
+    * ``external_edges(i)`` = edges with exactly one endpoint in ego(i)
+      = ``[i > 1] + [i < n-2]``.
 
-    Closed forms are exact for k=1 (validated against the generic
-    join-based seeds in tests); for k>1 the generic path is used.
+    Exact (validated against the generic join-based seeds in tests);
+    wider adjacency goes through ``operators.seeds.seed_features`` over
+    ``sources.transcripts.derive_edges``.
     """
-    if lag_k != 1:
-        raise NotImplementedError(
-            "closed-form seeds implemented for lag_k=1; use "
-            "operators.seeds.seed_features over derive_edges for k>1"
-        )
     n = Window.partitionBy("conv_id")
     t = transcripts
     attr_exprs: list = []
@@ -341,7 +326,6 @@ def extract_roles_at_cutoffs(
 def extract_transcript_features(
     transcripts: DataFrame,
     cutoff_ts=None,
-    lag_k: int = 1,
     max_generations: int = 10,
     with_attributes: bool = True,
     aggs: Sequence[str] = ("sum", "mean"),
@@ -371,50 +355,32 @@ def extract_transcript_features(
     if cutoff_ts is not None:
         t = t.where(F.col("ts") <= F.lit(cutoff_ts))
 
-    if lag_k == 1:
-        # chain mode: the recursion is pure window functions over
-        # (conv_id, turn_idx) — no neighbor join, one shuffle total
-        seeds = chain_seed_features(t, lag_k=1, with_attributes=with_attributes)
-        blocked = {}
-        if chain_block_size:
-            # skew bound: no window partition ever exceeds
-            # block_size + 2*(max_generations-1) rows (heavy-tail
-            # conversations stop pinning single tasks); halo depth
-            # max_generations-1 keeps results identical (see
-            # with_chain_blocks)
-            seeds = with_chain_blocks(
-                seeds, chain_block_size, halo=max(0, max_generations - 1)
-            )
-            blocked = {"chain_block_col": "__blk", "chain_own_col": "__own"}
-        rfe = RecursiveFeatureExtractor(
-            max_generations=max_generations,
-            aggs=aggs,
-            seed_frame=seeds,
-            chain_keys=("conv_id", "turn_idx"),
-            checkpoint_dir=checkpoint_dir,
-            prune=prune,
-            model=model,
-            **blocked,
+    # chain mode: the recursion is pure window functions over
+    # (conv_id, turn_idx) — no neighbor join, one shuffle total
+    seeds = chain_seed_features(t, with_attributes=with_attributes)
+    blocked = {}
+    if chain_block_size:
+        # skew bound: no window partition ever exceeds
+        # block_size + 2*(max_generations-1) rows (heavy-tail
+        # conversations stop pinning single tasks); halo depth
+        # max_generations-1 keeps results identical (see
+        # with_chain_blocks)
+        seeds = with_chain_blocks(
+            seeds, chain_block_size, halo=max(0, max_generations - 1)
         )
-        out = rfe.extract_features().drop("node")
-        return (out, rfe) if return_extractor else out
-
-    edges = derive_edges(t, lag_k=lag_k)
+        blocked = {"chain_block_col": "__blk", "chain_own_col": "__own"}
     rfe = RecursiveFeatureExtractor(
-        edges,
-        directed=False,
         max_generations=max_generations,
         aggs=aggs,
+        seed_frame=seeds,
+        chain_keys=("conv_id", "turn_idx"),
         checkpoint_dir=checkpoint_dir,
+        prune=prune,
         model=model,
+        **blocked,
     )
-    feats = rfe.extract_features()
-    keyed = feats.withColumn("__parts", F.split(F.col("node"), "#")).select(
-        F.col("__parts").getItem(0).alias("conv_id"),
-        F.col("__parts").getItem(1).cast("int").alias("turn_idx"),
-        *[c for c in feats.columns if c != "node"],
-    )
-    return (keyed, rfe) if return_extractor else keyed
+    out = rfe.extract_features().drop("node")
+    return (out, rfe) if return_extractor else out
 
 
 def fit_transcript_features(transcripts: DataFrame, **kwargs):

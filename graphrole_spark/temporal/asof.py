@@ -9,8 +9,7 @@ sort — the same as a sort-merge join, with no row explosion, no skew
 amplification beyond the key's own cardinality, and it scales to any
 number of right rows per key (unlike ``pd.merge_asof`` inside
 ``applyInPandas``, which needs the whole key group in one executor's
-memory — that variant is provided as ``asof_join_grouped`` for
-comparison/benchmarking).
+memory).
 """
 
 from __future__ import annotations
@@ -173,60 +172,4 @@ def asof_join(
     return probes.select(
         *[F.col(f"__row.{c}").alias(c) for c in left.columns],
         *out_vals,
-    )
-
-
-def asof_join_grouped(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    left_ts: str,
-    right_ts: str,
-    value_cols: Sequence[str],
-    suffix: str = "_asof",
-) -> DataFrame:
-    """Arrow-batched ``pd.merge_asof`` per key group (cogroup variant).
-
-    Semantically identical to :func:`asof_join` with exact matches; kept
-    as the vectorized alternative for benchmarking. Requires each key
-    group to fit in executor memory — fine for bounded conversations,
-    wrong for unbounded keys, which is why the union+window form is the
-    default.
-    """
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
-
-    on = list(on)
-    value_cols = list(value_cols)
-    # copy the fields — StructType.add mutates, and df.schema is cached
-    out_schema = StructType(
-        list(left.schema.fields)
-        + [StructField(f"{c}{suffix}", right.schema[c].dataType) for c in value_cols]
-    )
-
-    # rename the right side up front: when both inputs derive from the same
-    # scan, duplicate attribute ids make Catalyst prune the "other" copy of
-    # a same-named column out of the cogroup
-    right_renamed = right.select(
-        *on,
-        F.col(right_ts).alias("__r_ts"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in value_cols],
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if l_pdf.empty:
-            return pd.DataFrame(columns=out_names)
-        l_sorted = l_pdf.sort_values(left_ts, kind="mergesort")
-        r_sorted = r_pdf.drop(columns=list(on)).sort_values("__r_ts", kind="mergesort")
-        merged = pd.merge_asof(
-            l_sorted, r_sorted, left_on=left_ts, right_on="__r_ts",
-            direction="backward",
-        )
-        return merged[out_names]
-
-    return (
-        left.groupBy(*on)
-        .cogroup(right_renamed.groupBy(*on))
-        .applyInPandas(lambda l, r: merge(l, r), schema=out_schema)
     )

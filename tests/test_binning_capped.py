@@ -60,20 +60,21 @@ def test_high_cardinality_falls_back_and_matches(spark):
     assert np.array_equal(exact, got)
 
 
-def test_recursion_completes_with_tiny_cap(spark):
+def test_recursion_completes_with_tiny_cap(spark, monkeypatch):
     """Full extractor run with a cap far below the distinct counts —
     results must be identical to the uncapped run."""
+    from graphrole_spark.operators import recursion
     from graphrole_spark.pipeline import chain_seed_features
-    from graphrole_spark.operators.recursion import RecursiveFeatureExtractor
     from graphrole_spark.sources.transcripts import synthesize_transcripts
 
     t = synthesize_transcripts(spark, 25, seed=3).persist()
     seeds = chain_seed_features(t, with_attributes=True)
 
     def run(cap):
-        rfe = RecursiveFeatureExtractor(
+        monkeypatch.setattr(recursion, "HISTOGRAM_CAP", cap)
+        rfe = recursion.RecursiveFeatureExtractor(
             seed_frame=seeds, chain_keys=("conv_id", "turn_idx"),
-            max_generations=3, histogram_cap=cap,
+            max_generations=3,
         )
         out = rfe.extract_features().toPandas().set_index(["conv_id", "turn_idx"])
         return rfe.retained_by_generation(), out.sort_index()

@@ -76,6 +76,17 @@ def test_entry_smoke(spark):
     assert df.count() > 0
 
 
+def test_node_label_exact_above_2_pow_53(spark):
+    """Packed long node keys decode exactly over the whole long range: a
+    float division would round 2^53 + 1 to 2^53."""
+    big = 2**53 + 1
+    keys = [0, 3, 2 * 41, 2 * 41 + 1, 2 * big, 2 * big + 1]
+    frame = spark.createDataFrame([(k,) for k in keys], "node long")
+    got = [r["node"] for r in frame.select(entrymod._node_label("p", "s")).collect()]
+    assert got == ["p0", "s1", "p41", "s41", f"p{big}", f"s{big}"]
+    assert got[4] == "p9007199254740993"
+
+
 def test_oracle_backed_queries_lead():
     """Registry-order contract: the driver adjudicates only the first 50
     queries() entries, so every entry of the PUBLIC oracle_sql() must

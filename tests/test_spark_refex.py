@@ -172,3 +172,52 @@ def test_retained_generations_match_oracle(spark):
     assert rfe.retained_by_generation() == {
         g: sorted(names) for g, names in oracle.retained_by_generation().items()
     }
+
+
+def test_generation_step_contract_across_modes(spark, monkeypatch):
+    """One generation step, three ways of deciding what to keep: a pruned
+    fit measures every generation on a cached state and releases the
+    previous one; prune=False and frozen-model replay stay lazy."""
+    from graphrole_spark.pipeline import chain_seed_features
+    from graphrole_spark.sources.transcripts import synthesize_transcripts
+
+    seeds = chain_seed_features(synthesize_transcripts(spark, 12, seed=5))
+    states = []
+    update = RecursiveFeatureExtractor._update
+
+    def spy(self, new_frame, gen):
+        retained = update(self, new_frame, gen)
+        states.append(self._state)
+        return retained
+
+    monkeypatch.setattr(RecursiveFeatureExtractor, "_update", spy)
+
+    def run(**kw):
+        states.clear()
+        rfe = RecursiveFeatureExtractor(
+            seed_frame=seeds, chain_keys=("conv_id", "turn_idx"),
+            max_generations=3, **kw,
+        )
+        rfe.extract_features()
+        return rfe
+
+    fit = run()
+    assert len(states) >= 2 and states[-1] is fit._state
+    assert fit._state.is_cached
+    assert not any(s.is_cached for s in states[:-1])
+    assert all("histogram_sec" in e and e["row_count"] for e in fit.lineage)
+    fit._state.unpersist()
+
+    lazy = run(prune=False)
+    assert not lazy._state.is_cached
+    assert not any(s.is_cached for s in states)
+    assert all(
+        e["row_count"] is None and "histogram_sec" not in e for e in lazy.lineage
+    )
+
+    replay = run(model=fit.fitted_model())
+    assert not any(s.is_cached for s in states)
+    assert all(e["mode"] == "transform" for e in replay.lineage)
+    assert [e["retained"] for e in replay.lineage] == [
+        e["retained"] for e in fit.lineage
+    ]

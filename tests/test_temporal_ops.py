@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from graphrole_spark.temporal.asof import asof_join, asof_join_grouped
+from graphrole_spark.temporal.asof import asof_join
 from graphrole_spark.temporal.ops import (
     backfill,
     lag_lead_features,
@@ -143,30 +143,6 @@ def test_asof_join_vs_duckdb(events):
         """
     )
     _compare(got, exp, ["event_id"])
-
-
-def test_asof_join_grouped_matches_window_variant(events):
-    probes = events.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    refs = events.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value"
-    )
-    a = (
-        asof_join(probes, refs, ["user_id"], "ts", "ts", ["value"])
-        .select("event_id", "value_asof")
-        .toPandas()
-        .sort_values("event_id")
-        .reset_index(drop=True)
-    )
-    b = (
-        asof_join_grouped(probes, refs, ["user_id"], "ts", "ts", ["value"])
-        .select("event_id", "value_asof")
-        .toPandas()
-        .sort_values("event_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
 def test_sessionize_synthetic_transcripts(spark):
