@@ -71,9 +71,11 @@ def recover_interrupted_compaction(path: str) -> bool:
     live directory is missing but ``<path>.__old__`` exists, the crash
     happened mid-swap and the old data — complete by construction, it
     is only renamed away AFTER the rewrite verified — is restored.
-    Returns True when a restore happened. The store readers call this
-    on a missing path so an interrupted compaction can never silently
-    downgrade a probe to an empty store."""
+    Returns True when a restore happened. Every store read and append
+    (:func:`graphrole_spark.streaming.store.read_store`,
+    :func:`~graphrole_spark.streaming.store.append_new`) calls this first,
+    so an interrupted compaction can never silently downgrade a probe to
+    an empty store or restart a feature store's turns from one delta."""
     old = path + ".__old__"
     if not os.path.isdir(path) and os.path.isdir(old):
         os.rename(old, path)

@@ -38,26 +38,24 @@ Idempotency under foreachBatch's at-least-once replay:
   earlier attempt of the same batch may have appended them; rows from
   other batches — including an older delivery of the same doc id —
   still count);
-* appends anti-join the store per key (per (doc_id, band) for the
-  multi-row bands store, so a partially visible append is backfilled
-  row-complete instead of frozen half-written);
+* appends are :func:`~graphrole_spark.streaming.store.append_new` per
+  key — per (doc_id, band) for the multi-row bands store — over every
+  partition, since the stores are bucketed by hash but keyed by doc id;
 * the ``decisions/`` output is partitioned by batch id and written with
   dynamic partition overwrite, so a replayed batch replaces its own
   rows instead of appending a second copy.
 
-The shingle/band/signature parameters are persisted to
-``_params.json`` on first write and asserted on every later call —
-probing a store built under different parameters would silently find
-nothing.
+The shingle/band/signature parameters are pinned to the store
+(:func:`~graphrole_spark.streaming.store.check_params`); reads, the
+compaction recovery and the drain loop are the shared ones of
+:mod:`graphrole_spark.streaming.store`.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Optional
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -67,48 +65,15 @@ from graphrole_spark.functions.text import (
     minhash_bands,
     minhash_shingle_hashes,
 )
-from graphrole_spark.streaming.maintenance import N_BUCKETS, _bucket
-
-
-def _dir(store_dir: str, name: str) -> str:
-    return os.path.join(store_dir, name)
-
-
-def _read_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Read a store directory; empty frame ONLY for a missing path —
-    any other read failure (corrupt footer, transient FS error) must
-    propagate, or dedup silently degrades to admit-everything. A path
-    missing because a compaction crashed mid-swap is restored first
-    (the same admit-everything hazard)."""
-    if not os.path.isdir(path):
-        from graphrole_spark.streaming.compaction import (
-            recover_interrupted_compaction,
-        )
-
-        if not recover_interrupted_compaction(path):
-            return spark.createDataFrame([], schema)
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc):
-            return spark.createDataFrame([], schema)
-        raise
-
-
-def _check_params(store_dir: str, params: dict) -> None:
-    os.makedirs(store_dir, exist_ok=True)
-    path = os.path.join(store_dir, "_params.json")
-    if os.path.exists(path):
-        with open(path) as fh:
-            stored = json.load(fh)
-        if stored != params:
-            raise ValueError(
-                f"dedup store {store_dir} was built with {stored}; "
-                f"called with {params} — probes would be incomparable"
-            )
-    else:
-        with open(path, "w") as fh:
-            json.dump(params, fh)
+from graphrole_spark.streaming.store import (
+    N_BUCKETS,
+    append_new,
+    bucket,
+    bucket_ids,
+    check_params,
+    drain_available_now,
+    read_store,
+)
 
 
 def apply_dedup_delta(
@@ -133,7 +98,7 @@ def apply_dedup_delta(
     admitted documents semi-join status='new'.
     """
     bands = bands_for_threshold(jaccard_threshold, n_hashes)
-    _check_params(
+    check_params(
         store_dir,
         {
             "jaccard_threshold": jaccard_threshold,
@@ -146,7 +111,7 @@ def apply_dedup_delta(
             # a store whose shingle/band hashes were computed under a
             # different scheme would silently admit every near-duplicate
             # (stored hashes never match new-batch hashes) — exactly the
-            # failure _check_params exists to prevent. Stores written
+            # failure check_params exists to prevent. Stores written
             # before this field exists also fail loudly (dict mismatch).
             "shingle_hash_scheme": SHINGLE_HASH_SCHEME,
         },
@@ -171,17 +136,12 @@ def apply_dedup_delta(
     )
     intra_exact_dup = hashed.where(F.col("doc_id") != F.col("__first"))
 
-    content_store = _read_store(
+    content_store = read_store(
         spark,
-        _dir(store_dir, "content"),
+        os.path.join(store_dir, "content"),
         "content_hash string, doc_id long, __batch long, __cb int",
     )
-    probe_cb = [
-        r["__cb"]
-        for r in delta.select(_bucket(F.col("content_hash"), n_buckets).alias("__cb"))
-        .distinct()
-        .collect()
-    ]
+    probe_cb = bucket_ids(delta, bucket(F.col("content_hash"), n_buckets))
     store_hashes = (
         exclude_this_batch(content_store.where(F.col("__cb").isin(probe_cb or [-1])))
         .select("content_hash")
@@ -212,17 +172,12 @@ def apply_dedup_delta(
 
     # ---- store near probe (BEFORE the intra stage: a doc whose only
     # near-neighbor is a store-rejected batch sibling must be admitted)
-    band_store = _read_store(
+    band_store = read_store(
         spark,
-        _dir(store_dir, "bands"),
+        os.path.join(store_dir, "bands"),
         "band int, bhash long, doc_id long, __batch long, __bb int",
     )
-    probe_bb = [
-        r["__bb"]
-        for r in bands_all.select(_bucket(F.col("bhash"), n_buckets).alias("__bb"))
-        .distinct()
-        .collect()
-    ]
+    probe_bb = bucket_ids(bands_all, bucket(F.col("bhash"), n_buckets))
     cand = (
         bands_all.join(
             exclude_this_batch(band_store.where(F.col("__bb").isin(probe_bb or [-1])))
@@ -232,9 +187,9 @@ def apply_dedup_delta(
         .select("doc_id", "old_id")
         .distinct()
     )
-    shingle_store = _read_store(
+    shingle_store = read_store(
         spark,
-        _dir(store_dir, "shingles"),
+        os.path.join(store_dir, "shingles"),
         "doc_id long, shh array<long>, __batch long, __sb int",
     )
     old_sh = exclude_this_batch(shingle_store).join(
@@ -280,38 +235,28 @@ def apply_dedup_delta(
     )
 
     # ---- append admitted docs to the stores ------------------------------
-    def append(df: DataFrame, sub: str, bucket_col: str, keys: list) -> None:
-        """Idempotent append: anti-join the store on ``keys`` so a
-        partially visible earlier attempt is backfilled row-complete
-        (bands: per (doc_id, band)), never frozen half-written."""
-        path = _dir(store_dir, sub)
-        if os.path.isdir(path):
-            existing = spark.read.parquet(path).select(*keys).distinct()
-            df = df.join(existing, keys, "left_anti")
-        df.write.mode("append").partitionBy(bucket_col).parquet(path)
-
-    append(
+    append_new(
         delta.join(admitted_ids, "doc_id", "left_semi")
         .select("doc_id", "content_hash")
         .withColumn("__batch", F.lit(batch_id))
-        .withColumn("__cb", _bucket(F.col("content_hash"), n_buckets)),
-        "content",
+        .withColumn("__cb", bucket(F.col("content_hash"), n_buckets)),
+        os.path.join(store_dir, "content"),
         "__cb",
         ["doc_id"],
     )
-    append(
+    append_new(
         bands_all.join(admitted_ids, "doc_id", "left_semi")
         .withColumn("__batch", F.lit(batch_id))
-        .withColumn("__bb", _bucket(F.col("bhash"), n_buckets)),
-        "bands",
+        .withColumn("__bb", bucket(F.col("bhash"), n_buckets)),
+        os.path.join(store_dir, "bands"),
         "__bb",
         ["doc_id", "band"],
     )
-    append(
+    append_new(
         sh_all.join(admitted_ids, "doc_id", "left_semi")
         .withColumn("__batch", F.lit(batch_id))
-        .withColumn("__sb", _bucket(F.col("doc_id"), n_buckets)),
-        "shingles",
+        .withColumn("__sb", bucket(F.col("doc_id"), n_buckets)),
+        os.path.join(store_dir, "shingles"),
         "__sb",
         ["doc_id"],
     )
@@ -343,13 +288,6 @@ def ingest_available_now(
     ``<store_dir>/decisions`` partitioned by batch_id with dynamic
     partition overwrite, so a replayed batch REPLACES its own rows.
     Returns the number of micro-batches processed."""
-    schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    n_batches = {"n": 0}
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         decisions = apply_dedup_delta(
@@ -364,12 +302,9 @@ def ingest_available_now(
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
-            .parquet(_dir(store_dir, "decisions"))
+            .parquet(os.path.join(store_dir, "decisions"))
         )
-        n_batches["n"] += 1
 
-    writer = stream.writeStream.foreachBatch(step).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
-    return n_batches["n"]
+    return drain_available_now(
+        spark, source_dir, step, max_files_per_trigger, checkpoint_dir
+    )

@@ -86,30 +86,36 @@ def _stream_source_dir(parquet_path: str) -> str:
     return d
 
 
+def _drain_to_memory(spark, parquet_path: str, build, output_mode: str) -> DataFrame:
+    """Run the streaming query ``build(stream)`` over a parquet source
+    to completion (``availableNow``) into a memory sink and return the
+    sink's table."""
+    import uuid
+
+    schema = spark.read.parquet(parquet_path).schema
+    stream = spark.readStream.schema(schema).parquet(_stream_source_dir(parquet_path))
+    name = f"drain_{uuid.uuid4().hex[:12]}"
+    writer = build(stream).writeStream.format("memory").queryName(name)
+    writer.outputMode(output_mode).trigger(availableNow=True).start().awaitTermination()
+    return spark.table(name)
+
+
 def conversation_state_available_now(spark, parquet_path: str) -> DataFrame:
     """Run the stateful per-conversation counter
     (:func:`stream_conversation_state`, ``applyInPandasWithState``) to
     completion over a parquet source and return the emitted rows — the
     driver-contract surface for the custom stateful streaming operator."""
-    import uuid
-
-    schema = spark.read.parquet(parquet_path).schema
-    stream = spark.readStream.schema(schema).parquet(_stream_source_dir(parquet_path))
-    turns = stream.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.col("event_id").cast("long").alias("turn_idx"),
+    return _drain_to_memory(
+        spark,
+        parquet_path,
+        lambda stream: stream_conversation_state(
+            stream.select(
+                F.col("user_id").cast("string").alias("conv_id"),
+                F.col("event_id").cast("long").alias("turn_idx"),
+            )
+        ),
+        "append",
     )
-    out = stream_conversation_state(turns)
-    name = f"state_{uuid.uuid4().hex[:12]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def session_stats_available_now(
@@ -130,34 +136,24 @@ def session_stats_available_now(
     oracle can value-check the streaming operator. The file source needs
     a directory — a temp dir of symlinks wraps single-file tables.
     """
-    import uuid
 
-    schema = spark.read.parquet(parquet_path).schema
-    stream = spark.readStream.schema(schema).parquet(_stream_source_dir(parquet_path))
-    agg = (
-        stream.groupBy(F.session_window(ts_col, f"{gap_seconds} seconds"), key_col)
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(value_col), 6).alias("total_value"),
+    def build(stream: DataFrame) -> DataFrame:
+        return (
+            stream.groupBy(F.session_window(ts_col, f"{gap_seconds} seconds"), key_col)
+            .agg(
+                F.count("*").alias("n_events"),
+                F.round(F.sum(value_col), 6).alias("total_value"),
+            )
+            .select(
+                key_col,
+                F.col("session_window.start").alias("session_start"),
+                F.col("session_window.end").alias("session_end"),
+                "n_events",
+                "total_value",
+            )
         )
-        .select(
-            key_col,
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-    name = f"sess_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+
+    return _drain_to_memory(spark, parquet_path, build, "complete")
 
 
 _STATE_SCHEMA = "n_turns long, last_idx long"

@@ -7,15 +7,18 @@ each micro-batch triggers the incremental update
 (:func:`graphrole_spark.pipeline.update_transcript_features`) for
 exactly the conversations it touches.
 
-Scale design — the store is hash-bucketed by ``conv_id``:
+Scale design — the store is hash-bucketed by ``conv_id`` in the
+:mod:`graphrole_spark.streaming.store` layout (which also owns the
+compaction recovery and the idempotent append used here):
 
 * both the cumulative turns store and the feature store are parquet
   partitioned by ``__bucket = pmod(xxhash64(conv_id), n_buckets)``;
 * a micro-batch marks its dirty conversations → dirty buckets; reading
   back previous turns/features prunes to those partitions (partition
   filter on ``__bucket``), and the rewrite uses dynamic partition
-  overwrite — bytes touched per batch are O(dirty buckets), not
-  O(store), regardless of total store size;
+  overwrite, set as a per-write option (never on the shared session) —
+  bytes touched per batch are O(dirty buckets), not O(store),
+  regardless of total store size;
 * the recompute itself is the frozen-model transform (one lazy plan,
   zero per-generation driver actions) over only the dirty
   conversations.
@@ -33,17 +36,14 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-N_BUCKETS = 64
-
-
-def _bucket(col="conv_id", n_buckets: int = N_BUCKETS):
-    """Store-bucketing convention shared by the streaming stores
-    (feature maintenance here, ingestion dedup in corpus_dedup.py).
-    Accepts a column name or a Column expression."""
-    from pyspark.sql import Column
-
-    c = col if isinstance(col, Column) else F.col(col)
-    return F.pmod(F.xxhash64(c), F.lit(n_buckets)).cast("int")
+from graphrole_spark.streaming.store import (
+    N_BUCKETS,
+    append_new,
+    bucket,
+    bucket_ids,
+    drain_available_now,
+    read_store,
+)
 
 
 def _turns_dir(store_dir: str) -> str:
@@ -64,12 +64,12 @@ def bootstrap_feature_store(
     """Initialize the store: bucketed turns + frozen-model features."""
     from graphrole_spark.pipeline import transform_transcript_features
 
-    turns = transcripts.withColumn("__bucket", _bucket(n_buckets=n_buckets))
+    turns = transcripts.withColumn("__bucket", bucket(n_buckets=n_buckets))
     turns.write.mode("overwrite").partitionBy("__bucket").parquet(
         _turns_dir(store_dir)
     )
     feats = transform_transcript_features(transcripts, model).withColumn(
-        "__bucket", _bucket(n_buckets=n_buckets)
+        "__bucket", bucket(n_buckets=n_buckets)
     )
     feats.write.mode("overwrite").partitionBy("__bucket").parquet(
         _features_dir(store_dir)
@@ -88,53 +88,43 @@ def apply_delta(
     partitions."""
     from graphrole_spark.pipeline import update_transcript_features
 
-    delta = delta.withColumn("__bucket", _bucket(n_buckets=n_buckets)).persist()
-    # dirty buckets: tiny driver list (≤ n_buckets) → partition pruning
-    dirty_buckets = [
-        r["__bucket"] for r in delta.select("__bucket").distinct().collect()
-    ]
+    delta = delta.withColumn("__bucket", bucket(n_buckets=n_buckets)).persist()
+    dirty_buckets = bucket_ids(delta, "__bucket")
     if not dirty_buckets:
         delta.unpersist()
         return
+    # strict read before anything is written: a store that was never
+    # bootstrapped raises here instead of gaining a turns/ of the delta
+    feats_prev = read_store(spark, _features_dir(store_dir)).where(
+        F.col("__bucket").isin(dirty_buckets)
+    )
     # idempotent under foreachBatch's at-least-once replay: a retried
     # batch whose turns already landed (crash between the append and the
-    # feature overwrite) must not append them again — anti-join the delta
-    # against the stored turn keys of the dirty buckets (partition-pruned
-    # read, O(dirty) bytes)
-    existing_keys = spark.read.parquet(_turns_dir(store_dir)).where(
-        F.col("__bucket").isin(dirty_buckets)
-    ).select("conv_id", "turn_idx")
-    delta_new = delta.join(existing_keys, ["conv_id", "turn_idx"], "left_anti")
-    delta_new.write.mode("append").partitionBy("__bucket").parquet(
-        _turns_dir(store_dir)
-    )
+    # feature overwrite) must not append them again; the bucket is a
+    # function of conv_id, so only the dirty partitions' keys are read
+    keys = ["conv_id", "turn_idx"]
+    append_new(delta, _turns_dir(store_dir), "__bucket", keys, dirty_buckets)
 
     # belt-and-braces: dedup on the turn key when reading back, so even a
     # store corrupted by a pre-fix double-append converges to the correct
     # feature values on the next touch of its bucket
     turns_dirty = (
-        spark.read.parquet(_turns_dir(store_dir))
+        read_store(spark, _turns_dir(store_dir))
         .where(F.col("__bucket").isin(dirty_buckets))
-        .dropDuplicates(["conv_id", "turn_idx"])
-    )
-    feats_prev = spark.read.parquet(_features_dir(store_dir)).where(
-        F.col("__bucket").isin(dirty_buckets)
+        .dropDuplicates(keys)
     )
     updated = update_transcript_features(
         turns_dirty.drop("__bucket"),
         delta.drop("__bucket"),
         feats_prev.drop("__bucket"),
         model,
-    ).withColumn("__bucket", _bucket(n_buckets=n_buckets))
-
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        updated.write.mode("overwrite").partitionBy("__bucket").parquet(
-            _features_dir(store_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    ).withColumn("__bucket", bucket(n_buckets=n_buckets))
+    (
+        updated.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__bucket")
+        .parquet(_features_dir(store_dir))
+    )
     delta.unpersist()
 
 
@@ -151,25 +141,14 @@ def maintain_available_now(
     maintenance step per micro-batch; ``availableNow`` runs to
     completion, the production configuration would run unbounded).
     Returns the number of micro-batches processed."""
-    schema = spark.read.parquet(delta_source_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(delta_source_dir)
-
-    n_batches = {"n": 0}
 
     def step(batch_df: DataFrame, _batch_id: int) -> None:
         apply_delta(spark, batch_df, model, store_dir, n_buckets=n_buckets)
-        n_batches["n"] += 1
 
-    writer = stream.writeStream.foreachBatch(step).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
-    return n_batches["n"]
+    return drain_available_now(
+        spark, delta_source_dir, step, max_files_per_trigger, checkpoint_dir
+    )
 
 
 def read_features(spark: SparkSession, store_dir: str) -> DataFrame:
-    return spark.read.parquet(_features_dir(store_dir)).drop("__bucket")
+    return read_store(spark, _features_dir(store_dir)).drop("__bucket")

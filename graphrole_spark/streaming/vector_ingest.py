@@ -18,20 +18,19 @@ Store layout (all hash-bucketed so probes read O(batch) bytes):
   read only for candidate verification (semi-join pruned).
 
 Idempotency follows corpus_dedup: probes exclude rows stamped with the
-CURRENT batch id, appends anti-join per key ((vec_id, table) for the
-multi-row bucket store), and LSH parameters are persisted to
-``_params.json`` and asserted per call. Recall is the LSH recall of the
-same (n_planes, n_tables) banding the batch operators test against
-brute force — a miss admits a near-dup (no false rejections: candidates
-are exactly verified).
+CURRENT batch id, and appends are the idempotent
+:func:`~graphrole_spark.streaming.store.append_new` per key ((vec_id,
+table) for the multi-row bucket store). Reads and the LSH parameter pin
+are those of :mod:`graphrole_spark.streaming.store`. Recall is the LSH
+recall of the same (n_planes, n_tables) banding the batch operators test
+against brute force — a miss admits a near-dup (no false rejections:
+candidates are exactly verified).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,46 +39,14 @@ from graphrole_spark.functions.similarity import (
     _as_double,
     cosine,
 )
-from graphrole_spark.streaming.maintenance import N_BUCKETS, _bucket
-
-
-def _dir(store_dir: str, name: str) -> str:
-    return os.path.join(store_dir, name)
-
-
-def _read_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    # empty frame ONLY for a genuinely missing path; a path missing
-    # because a compaction crashed mid-swap is restored first (else the
-    # next batch silently probes an empty store and admits everything)
-    if not os.path.isdir(path):
-        from graphrole_spark.streaming.compaction import (
-            recover_interrupted_compaction,
-        )
-
-        if not recover_interrupted_compaction(path):
-            return spark.createDataFrame([], schema)
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc):
-            return spark.createDataFrame([], schema)
-        raise
-
-
-def _check_params(store_dir: str, params: dict) -> None:
-    os.makedirs(store_dir, exist_ok=True)
-    path = os.path.join(store_dir, "_params.json")
-    if os.path.exists(path):
-        with open(path) as fh:
-            stored = json.load(fh)
-        if stored != params:
-            raise ValueError(
-                f"vector store {store_dir} was built with {stored}; "
-                f"called with {params} — probes would be incomparable"
-            )
-    else:
-        with open(path, "w") as fh:
-            json.dump(params, fh)
+from graphrole_spark.streaming.store import (
+    N_BUCKETS,
+    append_new,
+    bucket,
+    bucket_ids,
+    check_params,
+    read_store,
+)
 
 
 def apply_vector_delta(
@@ -98,7 +65,7 @@ def apply_vector_delta(
     """One ingestion step. Returns ``(vec_id, status)`` with status ∈
     {'new', 'near_dup'} (one row per distinct batch vector) and appends
     admitted vectors' buckets + embeddings to the store."""
-    _check_params(
+    check_params(
         store_dir,
         {
             "threshold": threshold,
@@ -122,17 +89,12 @@ def apply_vector_delta(
         F.posexplode(buckets_udf(F.col("embedding"))).alias("table", "bucket"),
     ).localCheckpoint()
 
-    bucket_store = _read_store(
+    bucket_store = read_store(
         spark,
-        _dir(store_dir, "buckets"),
+        os.path.join(store_dir, "buckets"),
         "table int, bucket long, vec_id long, __batch long, __bb int",
     )
-    probe_bb = [
-        r["__bb"]
-        for r in new_buckets.select(_bucket(F.col("bucket"), n_buckets).alias("__bb"))
-        .distinct()
-        .collect()
-    ]
+    probe_bb = bucket_ids(new_buckets, bucket(F.col("bucket"), n_buckets))
     cand = (
         new_buckets.join(
             bucket_store.where(
@@ -144,9 +106,9 @@ def apply_vector_delta(
         .select("vec_id", "old_id")
         .distinct()
     )
-    vector_store = _read_store(
+    vector_store = read_store(
         spark,
-        _dir(store_dir, "vectors"),
+        os.path.join(store_dir, "vectors"),
         "vec_id long, embedding array<double>, __batch long, __vb int",
     )
     old_vecs = (
@@ -189,26 +151,19 @@ def apply_vector_delta(
         store_near_dup.unionByName(intra_near_dup).distinct().localCheckpoint()
     )
 
-    def append(df: DataFrame, sub: str, bucket_col: str, keys: list) -> None:
-        path = _dir(store_dir, sub)
-        if os.path.isdir(path):
-            existing = spark.read.parquet(path).select(*keys).distinct()
-            df = df.join(existing, keys, "left_anti")
-        df.write.mode("append").partitionBy(bucket_col).parquet(path)
-
-    append(
+    append_new(
         new_buckets.join(admitted_ids, "vec_id", "left_semi")
         .withColumn("__batch", F.lit(batch_id))
-        .withColumn("__bb", _bucket(F.col("bucket"), n_buckets)),
-        "buckets",
+        .withColumn("__bb", bucket(F.col("bucket"), n_buckets)),
+        os.path.join(store_dir, "buckets"),
         "__bb",
         ["vec_id", "table"],
     )
-    append(
+    append_new(
         delta.join(admitted_ids, "vec_id", "left_semi")
         .withColumn("__batch", F.lit(batch_id))
-        .withColumn("__vb", _bucket(F.col("vec_id"), n_buckets)),
-        "vectors",
+        .withColumn("__vb", bucket(F.col("vec_id"), n_buckets)),
+        os.path.join(store_dir, "vectors"),
         "__vb",
         ["vec_id"],
     )

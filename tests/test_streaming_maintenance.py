@@ -147,3 +147,85 @@ def test_apply_delta_idempotent_under_replay(spark, tmp_path):
     pd.testing.assert_frame_equal(once, twice)
     expected = _sorted(transform_transcript_features(full, model))
     pd.testing.assert_frame_equal(twice, expected)
+
+
+def test_apply_delta_restores_interrupted_compaction(spark, tmp_path):
+    """A compaction that crashed between its two renames leaves a
+    substore under ``<sub>.__old__``; the next micro-batch must restore
+    it, not fail on the missing path or start ``turns/`` over from the
+    delta alone."""
+    from graphrole_spark.streaming.compaction import compact_store
+
+    full = synthesize_transcripts(spark, 20, seed=13).persist()
+    w = Window.partitionBy("conv_id")
+    t = full.withColumn("__n", F.count("*").over(w))
+    grp = F.pmod(F.xxhash64("conv_id", F.lit(3)), F.lit(4))
+    is_d1 = (grp == 0) & (F.col("turn_idx") >= F.col("__n") - 2)
+    is_d2 = (grp == 1) & (F.col("turn_idx") >= F.col("__n") - 2)
+    delta1 = t.where(is_d1).drop("__n").persist()
+    delta2 = t.where(is_d2).drop("__n").persist()
+    base = t.where(~is_d1 & ~is_d2).drop("__n").persist()
+    assert delta1.count() > 0 and delta2.count() > 0
+
+    _, model = fit_transcript_features(base, max_generations=2)
+    store = str(tmp_path / "store")
+    bootstrap_feature_store(spark, base, model, store, n_buckets=4)
+    compact_store(spark, store)
+
+    for sub, delta in (("turns", delta1), ("features", delta2)):
+        path = os.path.join(store, sub)
+        os.rename(path, path + ".__old__")
+        apply_delta(spark, delta, model, store, n_buckets=4)
+        assert os.path.isdir(path)
+        assert not glob.glob(os.path.join(store, "*.__old__"))
+
+    got = _sorted(read_features(spark, store))
+    expected = _sorted(transform_transcript_features(full, model))
+    pd.testing.assert_frame_equal(got, expected)
+
+
+def test_maintain_available_now_calls_apply_delta_per_file(
+    spark, tmp_path, monkeypatch
+):
+    """The drain loop resolves ``maintenance.apply_delta`` at call time
+    (a wrapper installed on the module sees every micro-batch) and
+    returns the number of micro-batches — one per append file here."""
+    from graphrole_spark.streaming import maintenance
+
+    full = synthesize_transcripts(spark, 10, seed=3).persist()
+    w = Window.partitionBy("conv_id")
+    t = full.withColumn("__n", F.count("*").over(w))
+    is_delta = F.col("turn_idx") >= F.col("__n") - 1
+    base = t.where(~is_delta).drop("__n")
+    _, model = fit_transcript_features(base, max_generations=2)
+    store = str(tmp_path / "store")
+    bootstrap_feature_store(spark, base, model, store, n_buckets=4)
+
+    src = str(tmp_path / "incoming")
+    os.makedirs(src)
+    last = t.where(is_delta).drop("__n")
+    halves = F.pmod(F.xxhash64("conv_id"), F.lit(2))
+    for i in range(2):
+        staged = str(tmp_path / f"stage{i}")
+        last.where(halves == i).coalesce(1).write.parquet(staged)
+        part = glob.glob(os.path.join(staged, "part-*.parquet"))[0]
+        shutil.copy(part, os.path.join(src, f"delta{i}.parquet"))
+
+    calls = []
+    real = maintenance.apply_delta
+
+    def counting(*args, **kwargs):
+        calls.append(args[3])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(maintenance, "apply_delta", counting)
+    n = maintenance.maintain_available_now(
+        spark, src, model, store, n_buckets=4,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    assert calls == [store, store]
+    assert n == len(calls)
+    pd.testing.assert_frame_equal(
+        _sorted(read_features(spark, store)),
+        _sorted(transform_transcript_features(full, model)),
+    )
