@@ -106,9 +106,15 @@ class FeatureModel:
 
     @classmethod
     def from_extractor(cls, extractor) -> "FeatureModel":
+        # only generated columns: the extractor also caches statistics of
+        # lookahead candidates a later generation never generated
+        generated = {
+            c for entry in extractor.lineage for c in entry["retained"] + entry["dropped"]
+        }
         boundaries = {
             c: [float(x) for x in bounds]
             for c, (bounds, _cnt) in getattr(extractor, "_bounds_cache", {}).items()
+            if c in generated
         }
         return cls(
             generations=extractor.retained_by_generation(),

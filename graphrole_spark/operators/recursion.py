@@ -27,13 +27,25 @@ Each generation is a fixed, small pipeline of Spark jobs (SURVEY.md §2.3):
    single column projection of the last generation's frame, with NO
    multi-join.
 
-Per generation the engine runs exactly TWO actions (histogram +
-Chebyshev) plus optional checkpoint writes — no per-generation count()
-or intermediate kept-frame materialization. Cross-generation caches keep
+A measured generation runs exactly TWO actions (histogram + Chebyshev)
+plus optional checkpoint writes — no per-generation count() or
+intermediate kept-frame materialization. Cross-generation caches keep
 the per-generation driver constant flat: a feature column is immutable
 once computed, so its histogram/bin boundaries AND its pairwise
 Chebyshev distances to other old columns are computed exactly once;
 each generation only melts/compares the columns it introduced.
+
+One-generation lookahead (pruned chain mode): generation g+1's columns
+are ``agg(c)`` over g's retained columns, a subset of ``agg(c)`` over
+all of g's new columns. A measured generation g appends that superset
+as candidates to its persisted frame, and its two actions measure
+histograms and Chebyshev pairs over ``value_cols ∪ candidates``.
+Generation g+1 then reads its columns from that frame and finds every
+statistic in the caches: it runs no Spark job, so the recursion costs
+TWO actions per TWO generations. The result is exact — a column's
+values depend only on its name, and a pair's distance does not depend
+on what was pruned. Edges mode, ``prune=False`` and frozen-model replay
+measure nothing ahead.
 """
 
 from __future__ import annotations
@@ -197,6 +209,9 @@ class RecursiveFeatureExtractor:
         # a newly introduced column
         self._dist_cache: Dict[frozenset, float] = {}
         self._state: Optional[DataFrame] = None      # cached combined frame
+        # persisted frame that already carries (and has measured) the
+        # next generation's chain columns — set by a lookahead generation
+        self._ahead: Optional[DataFrame] = None
         self._active_cols: List[str] = []            # surviving feature names
         self._retained_order: List[str] = []         # all retained, gen order
         self._lineage: List[dict] = []
@@ -272,54 +287,67 @@ class RecursiveFeatureExtractor:
             return frame.where(F.col(self.chain_own_col))
         return frame
 
-    def _chain_exprs(self) -> List:
-        """lag/lead neighbor aggregates for the chain graph — appended as
-        columns; neighborless rows evaluate to the 0 the reference's
-        concat+fillna(0) assigns them (mean: 0/0 → null → filled)."""
+    def _chain_names(self, cols: Sequence[str]) -> List[str]:
+        """Names of the chain aggregates over ``cols``, agg-major."""
+        return [f"{c}({agg})" for agg in self.aggs for c in cols]
+
+    def _chain_exprs(self, cols: Sequence[str]) -> List:
+        """lag/lead neighbor aggregates of ``cols`` for the chain graph —
+        appended as columns; neighborless rows evaluate to the 0 the
+        reference's concat+fillna(0) assigns them (mean: 0/0 → null →
+        filled). The lag/lead pair of a column is built once and shared
+        by every agg (each Column is a driver-side py4j round trip)."""
         conv, idx = self.chain_keys
         parts = [conv] + ([self.chain_block_col] if self.chain_block_col else [])
         w = Window.partitionBy(*parts).orderBy(idx)
+        nbrs = {}
+        for c in cols:
+            l, r = F.lag(c).over(w), F.lead(c).over(w)
+            nbrs[c] = (l, r, F.coalesce(l, F.lit(0.0)) + F.coalesce(r, F.lit(0.0)))
         exprs = []
         for agg in self.aggs:
-            for c in self._prev_cols():
-                l, r = F.lag(c).over(w), F.lead(c).over(w)
+            for c in cols:
+                l, r, tot = nbrs[c]
                 if agg == "sum":
-                    e = F.coalesce(l, F.lit(0.0)) + F.coalesce(r, F.lit(0.0))
+                    e = tot
                 elif agg in ("mean", "avg"):
                     cnt = l.isNotNull().cast("double") + r.isNotNull().cast("double")
-                    tot = F.coalesce(l, F.lit(0.0)) + F.coalesce(r, F.lit(0.0))
                     # guard cnt=0 (ANSI mode would raise on x/0)
                     e = F.when(cnt > 0, tot / cnt).otherwise(F.lit(0.0))
                 elif agg == "max":
                     e = F.coalesce(F.greatest(l, r), F.lit(0.0))
                 else:  # min — least() ignores nulls like greatest()
                     e = F.coalesce(F.least(l, r), F.lit(0.0))
-                exprs.append(e.alias(f"{c}({agg})"))
-        return exprs
+                exprs.append(e)
+        return [e.alias(n) for e, n in zip(exprs, self._chain_names(cols))]
 
-    def _combine(self, new_frame: Optional[DataFrame], gen: int) -> Tuple[DataFrame, List[str]]:
+    def _combine(
+        self, new_frame: Optional[DataFrame], gen: int, lookahead: bool
+    ) -> Tuple[DataFrame, List[str]]:
+        """This generation's frame and new column names; with
+        ``lookahead`` the next generation's candidate chain columns (over
+        every new column) are appended too."""
         keys = (
             list(self.chain_keys) + self._chain_extra if self.chain_keys else []
         )
         if gen == 0:
-            combined = new_frame
             new_cols = [c for c in new_frame.columns if c != "node" and c not in keys]
-            value_cols = list(new_cols)
-            return combined.na.fill(0.0, value_cols), new_cols
-        # carry every retained column forward (active ⊆ retained): pure
-        # column re-select from the cached previous state, so finalize
-        # needs no joins and a later-dropped feature keeps its values
-        base = self._state.select("node", *keys, *self._retained_order)
-        if self.chain_keys:
-            exprs = self._chain_exprs()
-            combined = base.select("node", *keys, *self._retained_order, *exprs)
-            new_cols = [
-                f"{c}({agg})" for agg in self.aggs for c in self._prev_cols()
-            ]
+            combined = new_frame.na.fill(0.0, new_cols)
         else:
-            combined = base.join(new_frame, "node", "left")
-            new_cols = [c for c in new_frame.columns if c != "node"]
-            combined = combined.na.fill(0.0, new_cols)
+            # carry every retained column forward (active ⊆ retained):
+            # pure column re-select from the cached previous state, so
+            # finalize needs no joins and a later-dropped feature keeps
+            # its values
+            base = self._state.select("node", *keys, *self._retained_order)
+            if self.chain_keys:
+                new_cols = self._chain_names(self._prev_cols())
+                combined = base.select("*", *self._chain_exprs(self._prev_cols()))
+            else:
+                combined = base.join(new_frame, "node", "left")
+                new_cols = [c for c in new_frame.columns if c != "node"]
+                combined = combined.na.fill(0.0, new_cols)
+        if lookahead:
+            combined = combined.select("*", *self._chain_exprs(new_cols))
         return combined, new_cols
 
     def _tiny_query_conf(self):
@@ -353,19 +381,30 @@ class RecursiveFeatureExtractor:
         the bookkeeping, caching and lineage below are shared by all
         three."""
         t0 = time.time()
-        combined, new_cols = self._combine(new_frame, gen)
+        measured = self.model is None and self.prune
+        ahead, self._ahead = self._ahead, None
+        lookahead = False
+        if ahead is not None:
+            # built and measured one round early: the persisted frame
+            # already carries this generation's columns and statistics
+            combined, new_cols = ahead, self._chain_names(self._prev_cols())
+        else:
+            lookahead = bool(
+                measured and self.chain_keys and gen + 1 < self.max_generations
+            )
+            combined, new_cols = self._combine(new_frame, gen, lookahead)
+            # one cache rule: persist a generation that is measured (its
+            # statistics actions read it twice and materialize it), any
+            # edges-mode generation (the state is referenced twice per
+            # generation — concat base + neighbor agg — so persisting
+            # stops the lazy plan doubling) and any checkpointed one.
+            # Otherwise chain-mode replay and prune=False stay pure column
+            # selects: the whole recursion is one lazy plan with zero
+            # driver actions.
+            if measured or self.checkpoint_dir or not self.chain_keys:
+                combined = combined.persist()
         value_cols = self._active_cols + [c for c in new_cols if c not in self._active_cols] \
             if gen > 0 else new_cols
-        measured = self.model is None and self.prune
-        # one cache rule: persist a generation that is measured (its
-        # statistics actions read it twice and materialize it), any
-        # edges-mode generation (the state is referenced twice per
-        # generation — concat base + neighbor agg — so persisting stops
-        # the lazy plan doubling) and any checkpointed one. Otherwise
-        # chain-mode replay and prune=False stay pure column selects: the
-        # whole recursion is one lazy plan with zero driver actions.
-        if measured or self.checkpoint_dir or not self.chain_keys:
-            combined = combined.persist()
         entry = {"generation": gen, "row_count": None}
         if self.model is not None:
             # frozen-model replay: retained set comes from the fit, the
@@ -382,8 +421,10 @@ class RecursiveFeatureExtractor:
             # expressions, still zero exchanges); retain everything
             retained, to_drop = sorted(new_cols), []
         else:
-            to_drop = self._measure(combined, value_cols, gen, entry)
+            to_drop = self._measure(combined, value_cols, new_cols, lookahead, gen, entry)
             retained = sorted(set(new_cols) - set(to_drop))
+            if lookahead and retained:  # an empty generation ends the run
+                self._ahead = combined
 
         self._generation_dict[gen] = dict.fromkeys(retained)
         self._active_cols = [c for c in value_cols if c not in to_drop]
@@ -400,8 +441,10 @@ class RecursiveFeatureExtractor:
             # so the previous cache can go — but only once this
             # generation's actions have materialized the new one (an
             # unmeasured generation is still lazy: its earlier caches
-            # stay registered and Spark's LRU evicts as needed)
-            if measured and prev_state is not None:
+            # stay registered and Spark's LRU evicts as needed; a
+            # generation served by lookahead keeps the previous frame as
+            # its own state)
+            if measured and prev_state is not None and prev_state is not combined:
                 prev_state.unpersist()
 
         elapsed = time.time() - t0
@@ -420,21 +463,32 @@ class RecursiveFeatureExtractor:
         return retained
 
     def _measure(
-        self, combined: DataFrame, value_cols: List[str], gen: int, entry: dict
+        self,
+        combined: DataFrame,
+        value_cols: List[str],
+        new_cols: List[str],
+        lookahead: bool,
+        gen: int,
+        entry: dict,
     ) -> List[str]:
         """Pruning statistics of one generation over the persisted
         ``combined`` frame: log-bin boundaries, pairwise Chebyshev
-        distances, feature groups. Returns the names to drop and records
-        the row count, timings and first-seen boundaries in ``entry``."""
-        # one melt+histogram pass over the NEW columns only: bin
+        distances, feature groups. With ``lookahead`` the same two actions
+        also measure the next generation's candidate columns (appended to
+        ``combined`` by :meth:`_combine`) and their pairs. Returns
+        the names to drop and records the row count, action timings and
+        the boundaries of ``new_cols`` in ``entry``."""
+        # one melt+histogram pass over the columns not measured yet: bin
         # boundaries AND the row count (old columns come from the cache).
         # The collect is CAPPED at HISTOGRAM_CAP rows per feature; a
         # high-cardinality feature falls back to the exact chunked
         # boundary search (driver memory stays bounded at any scale)
-        t_hist = time.time()
-        to_melt = [c for c in value_cols if c not in self._bounds_cache]
+        cols = value_cols + (self._chain_names(new_cols) if lookahead else [])
+        to_melt = [c for c in cols if c not in self._bounds_cache]
         stats_frame = self._own_rows(combined)
+        t_hist = 0.0
         if to_melt:
+            t_hist = time.time()
             with self._tiny_query_conf():
                 complete, truncated = capped_melt(stats_frame, to_melt, HISTOGRAM_CAP)
             for c, (uniq, counts) in complete.items():
@@ -449,15 +503,18 @@ class RecursiveFeatureExtractor:
                     ),
                     total,
                 )
-        t_hist = time.time() - t_hist
+            t_hist = time.time() - t_hist
         row_count = self._bounds_cache[value_cols[0]][1]
-        bounds = {c: self._bounds_cache[c][0] for c in value_cols}
+        bounds = {c: self._bounds_cache[c][0] for c in cols}
         # distances between two OLD columns are cached (bins immutable);
-        # only pairs touching a column introduced this generation run
-        pairs = list(it.combinations(value_cols, 2))
-        todo = [p for p in pairs if frozenset(p) not in self._dist_cache]
-        t_cheb = time.time()
+        # only pairs touching a column not measured yet run — with
+        # lookahead, every pair the next generation can need
+        todo = [
+            p for p in it.combinations(cols, 2) if frozenset(p) not in self._dist_cache
+        ]
+        t_cheb = 0.0
         if todo:
+            t_cheb = time.time()
             # binning + pairwise max fused into one Arrow reduction pass
             # over the cached frame (no second cache, no per-generation
             # expression-tree compile)
@@ -465,8 +522,10 @@ class RecursiveFeatureExtractor:
             self._dist_cache.update(
                 {frozenset(p): d for p, d in fresh_dists.items()}
             )
-        dists = {p: self._dist_cache[frozenset(p)] for p in pairs}
-        t_cheb = time.time() - t_cheb
+            t_cheb = time.time() - t_cheb
+        dists = {
+            p: self._dist_cache[frozenset(p)] for p in it.combinations(value_cols, 2)
+        }
         groups = group_feature_names(value_cols, dists, gen)
         entry.update(
             row_count=row_count,
@@ -476,7 +535,7 @@ class RecursiveFeatureExtractor:
             # decisions for first-seen columns were measured with (lets
             # FeatureModel.from_checkpoint reconstruct the full model)
             boundaries={
-                c: [float(x) for x in self._bounds_cache[c][0]] for c in to_melt
+                c: [float(x) for x in self._bounds_cache[c][0]] for c in new_cols
             },
         )
         return select_features_to_drop(groups, self._generation_dict)
@@ -513,7 +572,10 @@ class RecursiveFeatureExtractor:
         self._last_ckpt_partitions = sorted(
             (int(r["count"]) for r in per_file), reverse=True
         )
-        combined.unpersist()
+        # a lookahead frame stays cached: the next generation reads its
+        # columns from it (the checkpoint holds only retained ones)
+        if combined is not self._ahead:
+            combined.unpersist()
         if self._state is not None:
             self._state.unpersist()
         return state

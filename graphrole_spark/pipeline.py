@@ -314,11 +314,13 @@ def extract_roles_at_cutoffs(
     ext = RoleExtractor(n_roles=n_roles)
     ext.extract_role_factors(nodeframe)
     roles = ext.role_percentage if soft else ext.roles
-    parts = F.split(F.col("node"), "#", 3)
+    # decode from the right: turn_idx and cutoff_ts hold no '#', while
+    # conv_id may (a left split would cast part of it to int)
+    key = r"(?s)^(.*)#(-?\d+)#([^#]*)$"
     return roles.select(
-        parts.getItem(0).alias("conv_id"),
-        parts.getItem(1).cast("int").alias("turn_idx"),
-        parts.getItem(2).cast("timestamp").alias("cutoff_ts"),
+        F.regexp_extract("node", key, 1).alias("conv_id"),
+        F.regexp_extract("node", key, 2).cast("int").alias("turn_idx"),
+        F.regexp_extract("node", key, 3).cast("timestamp").alias("cutoff_ts"),
         *[c for c in roles.columns if c != "node"],
     )
 

@@ -343,6 +343,30 @@ def test_roles_at_cutoffs(spark, transcripts):
     assert np.allclose(soft[role_cols].sum(axis=1), 1.0)
 
 
+def test_roles_at_cutoffs_conv_id_with_hash(spark):
+    """Membership keys decode from the right: a conv_id holding '#' comes
+    back whole (a left split would cast a piece of it to int, which ANSI
+    mode rejects)."""
+    from graphrole_spark.pipeline import extract_roles_at_cutoffs
+
+    t = synthesize_transcripts(spark, 6, seed=3)
+    first = t.agg(F.min("conv_id")).first()[0]
+    t = t.withColumn(
+        "conv_id",
+        F.when(F.col("conv_id") == first, F.lit("a#b")).otherwise(F.col("conv_id")),
+    ).persist()
+    cutoffs = _cutoffs(t)
+    got = extract_roles_at_cutoffs(t, cutoffs, n_roles=2, max_generations=2).toPandas()
+    turns = t.select("conv_id", "turn_idx").toPandas()
+    t.unpersist()
+    assert {pd.Timestamp(c) for c in got.cutoff_ts.unique()} == set(cutoffs)
+    last = got[got.cutoff_ts.apply(pd.Timestamp) == max(cutoffs)]
+    assert sorted(zip(last.conv_id, last.turn_idx)) == sorted(
+        zip(turns.conv_id, turns.turn_idx)
+    )
+    assert (got.conv_id == "a#b").any()
+
+
 def test_blocked_chain_mode_matches_unblocked(spark):
     """Skew-bounded (halo-blocked) chain windows must produce exactly
     the whole-conversation result: same retained names, allclose values

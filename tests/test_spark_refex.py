@@ -221,3 +221,55 @@ def test_generation_step_contract_across_modes(spark, monkeypatch):
     assert [e["retained"] for e in replay.lineage] == [
         e["retained"] for e in fit.lineage
     ]
+
+
+def test_chain_lookahead_two_rounds_at_depth_4(spark, monkeypatch):
+    """A pruned depth-4 chain fit measures generations 1 and 3 inside the
+    actions of generations 0 and 2: two histogram and two Chebyshev
+    actions instead of four — also with halo-blocked windows and with a
+    histogram cap far below the distinct counts, which must not change a
+    decision or a value. (Equality with a recursion that measures every
+    generation: tests/test_pipeline.py::test_chain_mode_matches_edges_mode.)"""
+    from graphrole_spark.operators import recursion
+    from graphrole_spark.pipeline import chain_seed_features, with_chain_blocks
+    from graphrole_spark.sources.transcripts import synthesize_transcripts
+
+    t = synthesize_transcripts(spark, 4, seed=42).persist()
+    seeds = chain_seed_features(t, attributes_include=["is_user", "turn_pos"])
+    calls = {"capped_melt": 0, "chebyshev_distances_arrow": 0}
+    for name in calls:
+        def counted(*args, _fn=getattr(recursion, name), _name=name, **kw):
+            calls[_name] += 1
+            return _fn(*args, **kw)
+
+        monkeypatch.setattr(recursion, name, counted)
+
+    def fit(cap, **kw):
+        monkeypatch.setattr(recursion, "HISTOGRAM_CAP", cap)
+        calls.update(dict.fromkeys(calls, 0))
+        rfe = RecursiveFeatureExtractor(
+            chain_keys=("conv_id", "turn_idx"), max_generations=4, **kw
+        )
+        out = rfe.extract_features().toPandas().set_index("node").sort_index()
+        assert calls == {"capped_melt": 2, "chebyshev_distances_arrow": 2}
+        assert len(rfe.lineage) == 4
+        served = rfe.lineage[1::2]
+        assert all(e["histogram_sec"] == e["chebyshev_sec"] == 0.0 for e in served)
+        generated = {c for e in rfe.lineage for c in e["retained"] + e["dropped"]}
+        assert set(rfe.fitted_model().boundaries) == generated
+        decisions = [
+            (e["retained"], e["dropped"], e["row_count"], e["boundaries"])
+            for e in rfe.lineage
+        ]
+        return decisions, out.drop(columns=["conv_id", "turn_idx"])
+
+    cap = recursion.HISTOGRAM_CAP
+    expected, plain = fit(cap, seed_frame=seeds)
+    for got, out in (
+        fit(cap, seed_frame=with_chain_blocks(seeds, block_size=8, halo=3),
+            chain_block_col="__blk", chain_own_col="__own"),
+        fit(5, seed_frame=seeds),
+    ):
+        assert got == expected
+        pd.testing.assert_frame_equal(out, plain)
+    t.unpersist()
