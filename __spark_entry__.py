@@ -521,14 +521,18 @@ def q_log_binning(spark, sf_dir):
     distributed histogram + exact reference boundary loop + JVM bin
     expression, value-checked against a recursive-CTE DuckDB oracle
     (reference semantics: graphrole/features/prune.py:13-56)."""
-    from graphrole_spark.operators.binning import bin_expression, melt_histogram
-    from graphrole_spark.oracle.binning import bin_boundaries
+    from graphrole_spark.operators.binning import (
+        bin_expression,
+        capped_melt,
+        chunked_bin_boundaries,
+    )
+    from graphrole_spark.operators.recursion import HISTOGRAM_CAP
 
     ev = _events(spark, sf_dir).select(
         "event_id", F.col("value").cast("double").alias("value")
     )
-    uniq, counts = melt_histogram(ev, ["value"])["value"]
-    bounds = bin_boundaries(uniq, counts, frac=0.5)
+    hist = capped_melt(ev, ["value"], HISTOGRAM_CAP)["value"]
+    bounds = chunked_bin_boundaries(ev, "value", hist, HISTOGRAM_CAP)
     return ev.select(
         "event_id", bin_expression("value", bounds).cast("long").alias("bin")
     )

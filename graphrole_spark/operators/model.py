@@ -32,6 +32,17 @@ from dataclasses import dataclass, field
 from typing import Dict, List, Optional
 
 
+def _lineage_boundaries(lineage: List[dict]) -> Dict[str, List[float]]:
+    """Union of the lineage entries' boundaries: each measured generation
+    records those of the columns it generated, so the union covers
+    exactly the generated (retained ∪ dropped) columns."""
+    out: Dict[str, List[float]] = {}
+    for entry in lineage:
+        for c, b in (entry.get("boundaries") or {}).items():
+            out[c] = list(b)
+    return out
+
+
 @dataclass
 class FeatureModel:
     """Per-generation retained-feature plan of a fitted extraction.
@@ -94,32 +105,18 @@ class FeatureModel:
         checkpointed run is already a reusable model."""
         with open(os.path.join(checkpoint_dir, "_lineage.json")) as fh:
             manifest = json.load(fh)
-        boundaries: Dict[str, List[float]] = {}
-        for entry in manifest.get("generations", []):
-            for c, b in (entry.get("boundaries") or {}).items():
-                boundaries[c] = b
         return cls(
             generations=manifest["generation_dict"],
             aggs=manifest["aggs"],
-            boundaries=boundaries,
+            boundaries=_lineage_boundaries(manifest.get("generations", [])),
         )
 
     @classmethod
     def from_extractor(cls, extractor) -> "FeatureModel":
-        # only generated columns: the extractor also caches statistics of
-        # lookahead candidates a later generation never generated
-        generated = {
-            c for entry in extractor.lineage for c in entry["retained"] + entry["dropped"]
-        }
-        boundaries = {
-            c: [float(x) for x in bounds]
-            for c, (bounds, _cnt) in getattr(extractor, "_bounds_cache", {}).items()
-            if c in generated
-        }
         return cls(
             generations=extractor.retained_by_generation(),
             aggs=list(extractor.aggs),
-            boundaries=boundaries,
+            boundaries=_lineage_boundaries(extractor.lineage),
         )
 
     # -- validation ------------------------------------------------------

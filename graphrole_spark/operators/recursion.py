@@ -63,7 +63,6 @@ from graphrole_spark.operators.aggregate import neighbor_aggregate, normalize_ag
 from graphrole_spark.operators.binning import capped_melt, chunked_bin_boundaries
 from graphrole_spark.operators.pruning import chebyshev_distances_arrow
 from graphrole_spark.operators.seeds import seed_features, symmetrize
-from graphrole_spark.oracle.binning import bin_boundaries
 from graphrole_spark.operators.model import FeatureModel
 from graphrole_spark.oracle.prune import group_feature_names, select_features_to_drop
 
@@ -71,6 +70,10 @@ _CHAIN_AGGS = {"sum", "mean", "avg", "max", "min"}
 # bounded-driver guarantee: never collect more than this many histogram
 # rows per feature in one chunk (SURVEY §7 risk 2)
 HISTOGRAM_CAP = 1_000_000
+# blocked chain mode: a seed frame carrying both columns (see
+# pipeline.with_chain_blocks) partitions every window by (conv, block)
+CHAIN_BLOCK_COL = "__blk"
+CHAIN_OWN_COL = "__own"
 
 
 class RecursiveFeatureExtractor:
@@ -89,16 +92,16 @@ class RecursiveFeatureExtractor:
         may carry extra passthrough key columns named in ``chain_keys``
     :param chain_keys: (conv_col, idx_col) — activates chain mode:
         neighbor aggregation via lag/lead windows instead of a join.
-        Requires ``seed_frame`` containing those columns.
-    :param chain_block_col: optional block column for SKEW-BOUNDED chain
-        windows: every window partitions by (conv, block) instead of the
-        whole conversation, so one pathological 10^8-turn conversation
-        never pins a single task. The seed frame must carry halo copies
-        of block-edge rows (see ``pipeline.with_chain_blocks``; halo
-        depth ≥ max_generations - 1 makes blocked results bit-identical
-        to whole-conversation windows) plus a boolean ``chain_own_col``
-        marking owner rows — pruning statistics and the final output use
-        owner rows only.
+        Requires ``seed_frame`` containing those columns. A seed frame
+        that also carries ``CHAIN_BLOCK_COL`` and ``CHAIN_OWN_COL`` runs
+        SKEW-BOUNDED chain windows: every window partitions by (conv,
+        block) instead of the whole conversation, so one pathological
+        10^8-turn conversation never pins a single task. Its rows include
+        halo copies of block-edge rows (see ``pipeline.with_chain_blocks``;
+        halo depth ≥ max_generations - 1 makes blocked results
+        bit-identical to whole-conversation windows), and the boolean
+        ``CHAIN_OWN_COL`` marks owner rows — pruning statistics and the
+        final output use owner rows only.
     :param checkpoint_dir: when set, per-generation parquet checkpoints +
         ``_lineage.json`` are written there and extraction can resume
     :param prune: when False, skip redundancy pruning entirely — every
@@ -122,8 +125,6 @@ class RecursiveFeatureExtractor:
         checkpoint_dir: Optional[str] = None,
         seed_frame: Optional[DataFrame] = None,
         chain_keys: Optional[Tuple[str, str]] = None,
-        chain_block_col: Optional[str] = None,
-        chain_own_col: Optional[str] = None,
         prune: bool = True,
         model: Optional[FeatureModel] = None,
     ) -> None:
@@ -155,19 +156,20 @@ class RecursiveFeatureExtractor:
         aggs = [name for name, _ in agg_pairs]
         self._agg_pairs = agg_pairs
         self.chain_keys = tuple(chain_keys) if chain_keys else None
-        self.chain_block_col = chain_block_col
-        self.chain_own_col = chain_own_col
-        if (chain_block_col is None) != (chain_own_col is None):
-            raise ValueError("chain_block_col and chain_own_col come together")
+        self._blocked = False
         if self.chain_keys:
             if seed_frame is None:
                 raise ValueError("chain mode requires seed_frame with the key columns")
-            required = set(self.chain_keys) | (
-                {chain_block_col, chain_own_col} if chain_block_col else set()
-            )
-            missing = required - set(seed_frame.columns)
+            missing = set(self.chain_keys) - set(seed_frame.columns)
             if missing:
                 raise ValueError(f"seed_frame lacks chain key columns {missing}")
+            marks = {CHAIN_BLOCK_COL, CHAIN_OWN_COL} & set(seed_frame.columns)
+            if len(marks) == 1:
+                raise ValueError(
+                    f"blocked chain mode needs both {CHAIN_BLOCK_COL} and "
+                    f"{CHAIN_OWN_COL} in seed_frame; got only {marks}"
+                )
+            self._blocked = bool(marks)
             bad = set(aggs) - _CHAIN_AGGS
             if bad:
                 raise ValueError(f"chain mode supports aggs {_CHAIN_AGGS}; got {bad}")
@@ -279,12 +281,12 @@ class RecursiveFeatureExtractor:
     @property
     def _chain_extra(self) -> List[str]:
         """Internal passthrough columns in blocked-chain mode."""
-        return [c for c in (self.chain_block_col, self.chain_own_col) if c]
+        return [CHAIN_BLOCK_COL, CHAIN_OWN_COL] if self._blocked else []
 
     def _own_rows(self, frame: DataFrame) -> DataFrame:
         """Owner-row view (drops halo copies) for statistics/output."""
-        if self.chain_own_col:
-            return frame.where(F.col(self.chain_own_col))
+        if self._blocked:
+            return frame.where(F.col(CHAIN_OWN_COL))
         return frame
 
     def _chain_names(self, cols: Sequence[str]) -> List[str]:
@@ -298,7 +300,7 @@ class RecursiveFeatureExtractor:
         filled). The lag/lead pair of a column is built once and shared
         by every agg (each Column is a driver-side py4j round trip)."""
         conv, idx = self.chain_keys
-        parts = [conv] + ([self.chain_block_col] if self.chain_block_col else [])
+        parts = [conv, CHAIN_BLOCK_COL] if self._blocked else [conv]
         w = Window.partitionBy(*parts).orderBy(idx)
         nbrs = {}
         for c in cols:
@@ -477,12 +479,19 @@ class RecursiveFeatureExtractor:
         also measure the next generation's candidate columns (appended to
         ``combined`` by :meth:`_combine`) and their pairs. Returns
         the names to drop and records the row count, action timings and
-        the boundaries of ``new_cols`` in ``entry``."""
+        the boundaries of ``new_cols`` in ``entry``.
+
+        ``capped_melt`` is the first action on the freshly persisted
+        ``combined`` frame, so ``histogram_sec`` also covers computing the
+        generation itself — for generation 0 the input scan and the seed
+        features (in the point-in-time transcript pipeline: the
+        shared-scan explode, sessionize and the seeds); the Chebyshev
+        action then reads the cache."""
         # one melt+histogram pass over the columns not measured yet: bin
         # boundaries AND the row count (old columns come from the cache).
         # The collect is CAPPED at HISTOGRAM_CAP rows per feature; a
-        # high-cardinality feature falls back to the exact chunked
-        # boundary search (driver memory stays bounded at any scale)
+        # high-cardinality feature finishes its exact boundary search in
+        # further chunks (driver memory stays bounded at any scale)
         cols = value_cols + (self._chain_names(new_cols) if lookahead else [])
         to_melt = [c for c in cols if c not in self._bounds_cache]
         stats_frame = self._own_rows(combined)
@@ -490,18 +499,11 @@ class RecursiveFeatureExtractor:
         if to_melt:
             t_hist = time.time()
             with self._tiny_query_conf():
-                complete, truncated = capped_melt(stats_frame, to_melt, HISTOGRAM_CAP)
-            for c, (uniq, counts) in complete.items():
+                hists = capped_melt(stats_frame, to_melt, HISTOGRAM_CAP)
+            for c, hist in hists.items():
                 self._bounds_cache[c] = (
-                    bin_boundaries(uniq, counts),
-                    int(counts.sum()) if len(counts) else 0,
-                )
-            for c, (uniq, counts, total) in truncated.items():
-                self._bounds_cache[c] = (
-                    chunked_bin_boundaries(
-                        stats_frame, c, total, (uniq, counts), cap=HISTOGRAM_CAP
-                    ),
-                    total,
+                    chunked_bin_boundaries(stats_frame, c, hist, HISTOGRAM_CAP),
+                    hist[2],
                 )
             t_hist = time.time() - t_hist
         row_count = self._bounds_cache[value_cols[0]][1]
@@ -593,8 +595,6 @@ class RecursiveFeatureExtractor:
                     "directed": self.directed,
                     "max_generations": self.max_generations,
                     "chain_keys": list(self.chain_keys) if self.chain_keys else None,
-                    "chain_block_col": self.chain_block_col,
-                    "chain_own_col": self.chain_own_col,
                     "done": done,
                 },
                 fh,
@@ -624,10 +624,8 @@ class RecursiveFeatureExtractor:
             kwargs.setdefault("max_generations", manifest["max_generations"])
         if manifest.get("chain_keys"):
             kwargs.setdefault("chain_keys", tuple(manifest["chain_keys"]))
-            if manifest.get("chain_block_col"):
-                kwargs.setdefault("chain_block_col", manifest["chain_block_col"])
-                kwargs.setdefault("chain_own_col", manifest["chain_own_col"])
-            # placeholder seed frame; replaced by checkpointed state below
+            # placeholder seed frame, replaced by checkpointed state below;
+            # its block/owner columns (if any) switch on blocked mode
             kwargs.setdefault(
                 "seed_frame",
                 spark.read.parquet(os.path.join(checkpoint_dir, "gen=0", "state")),

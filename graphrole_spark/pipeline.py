@@ -28,7 +28,11 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from graphrole_spark.operators.recursion import RecursiveFeatureExtractor
+from graphrole_spark.operators.recursion import (
+    CHAIN_BLOCK_COL,
+    CHAIN_OWN_COL,
+    RecursiveFeatureExtractor,
+)
 from graphrole_spark.sources.transcripts import entity_col
 from graphrole_spark.temporal.ops import sessionize
 
@@ -114,18 +118,12 @@ def chain_seed_features(
     )
 
 
-def with_chain_blocks(
-    seeds: DataFrame,
-    block_size: int,
-    halo: int,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    block_col: str = "__blk",
-    own_col: str = "__own",
-) -> DataFrame:
+def with_chain_blocks(seeds: DataFrame, block_size: int, halo: int) -> DataFrame:
     """Skew-bounding halo explode for blocked chain windows.
 
-    Splits each conversation into ``block_size``-turn blocks and
+    Splits each conversation into ``block_size``-turn blocks (column
+    ``CHAIN_BLOCK_COL``, owner rows flagged in ``CHAIN_OWN_COL``; a
+    seed frame carrying both runs the extractor in blocked mode) and
     duplicates each block's first/last ``halo`` rows into the
     neighboring block's group. Every window partition is then at most
     ``block_size + 2*halo`` rows, regardless of conversation length —
@@ -144,8 +142,8 @@ def with_chain_blocks(
             f"block_size ({block_size}) must exceed halo ({halo}): a halo "
             "may only span one neighboring block"
         )
-    blk = (F.col(idx_col) / block_size).cast("long")
-    pos = F.col(idx_col) % block_size
+    blk = (F.col("turn_idx") / block_size).cast("long")
+    pos = F.col("turn_idx") % block_size
     copies = F.array(
         F.struct(blk.alias("b"), F.lit(True).alias("own")),
         # head rows serve the PREVIOUS block's lead frontier
@@ -164,8 +162,8 @@ def with_chain_blocks(
     )
     return exploded.select(
         *seeds.columns,
-        F.col("__copy.b").alias(block_col),
-        F.col("__copy.own").alias(own_col),
+        F.col("__copy.b").alias(CHAIN_BLOCK_COL),
+        F.col("__copy.own").alias(CHAIN_OWN_COL),
     )
 
 
@@ -360,7 +358,6 @@ def extract_transcript_features(
     # chain mode: the recursion is pure window functions over
     # (conv_id, turn_idx) — no neighbor join, one shuffle total
     seeds = chain_seed_features(t, with_attributes=with_attributes)
-    blocked = {}
     if chain_block_size:
         # skew bound: no window partition ever exceeds
         # block_size + 2*(max_generations-1) rows (heavy-tail
@@ -370,7 +367,6 @@ def extract_transcript_features(
         seeds = with_chain_blocks(
             seeds, chain_block_size, halo=max(0, max_generations - 1)
         )
-        blocked = {"chain_block_col": "__blk", "chain_own_col": "__own"}
     rfe = RecursiveFeatureExtractor(
         max_generations=max_generations,
         aggs=aggs,
@@ -379,7 +375,6 @@ def extract_transcript_features(
         checkpoint_dir=checkpoint_dir,
         prune=prune,
         model=model,
-        **blocked,
     )
     out = rfe.extract_features().drop("node")
     return (out, rfe) if return_extractor else out

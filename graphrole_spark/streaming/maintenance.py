@@ -21,7 +21,10 @@ compaction recovery and the idempotent append used here):
   regardless of total store size;
 * the recompute itself is the frozen-model transform (one lazy plan,
   zero per-generation driver actions) over only the dirty
-  conversations.
+  conversations;
+* ``n_buckets`` is pinned in the store's ``_params.json`` at bootstrap:
+  a delta bucketed by another count would rewrite partitions the store
+  never reads back, so such a step raises instead.
 
 The result after any number of batches is bit-identical to a full
 transform of the whole accumulated table (tested in
@@ -41,6 +44,7 @@ from graphrole_spark.streaming.store import (
     append_new,
     bucket,
     bucket_ids,
+    check_params,
     drain_available_now,
     read_store,
 )
@@ -61,8 +65,14 @@ def bootstrap_feature_store(
     store_dir: str,
     n_buckets: int = N_BUCKETS,
 ) -> None:
-    """Initialize the store: bucketed turns + frozen-model features."""
+    """Initialize the store: bucketed turns + frozen-model features.
+    Rewrites the whole store, so ``n_buckets`` is pinned afresh."""
     from graphrole_spark.pipeline import transform_transcript_features
+
+    pin = os.path.join(store_dir, "_params.json")
+    if os.path.exists(pin):
+        os.remove(pin)
+    check_params(store_dir, {"n_buckets": n_buckets})
 
     turns = transcripts.withColumn("__bucket", bucket(n_buckets=n_buckets))
     turns.write.mode("overwrite").partitionBy("__bucket").parquet(
@@ -85,9 +95,11 @@ def apply_delta(
 ) -> None:
     """One maintenance step: append the new turns, recompute features of
     the touched conversations, dynamically overwrite only their bucket
-    partitions."""
+    partitions. Raises ValueError if ``n_buckets`` is not the one the
+    store was bootstrapped with."""
     from graphrole_spark.pipeline import update_transcript_features
 
+    check_params(store_dir, {"n_buckets": n_buckets})
     delta = delta.withColumn("__bucket", bucket(n_buckets=n_buckets)).persist()
     dirty_buckets = bucket_ids(delta, "__bucket")
     if not dirty_buckets:

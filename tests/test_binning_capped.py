@@ -1,41 +1,32 @@
 """Bounded-driver binning: capped melt + exact chunked boundary search.
 
-Property: the capped/chunked path must equal the exact full-histogram
-path for ANY cap ≥ 1 (the chunked loop replays the reference boundary
-loop across value-ordered chunks). A synthetic high-cardinality feature
-exercises the fallback inside the full recursion.
+Property: the capped/chunked path must equal the exact reference
+boundaries (``np.unique`` histogram of the raw values + oracle
+``bin_boundaries``) for ANY cap ≥ 1 — the chunked loop replays the
+reference boundary loop across value-ordered chunks. A synthetic
+high-cardinality feature exercises the fallback inside the full
+recursion.
 """
 
 import numpy as np
 import pandas as pd
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
-from graphrole_spark.operators.binning import (
-    capped_melt,
-    chunked_bin_boundaries,
-    melt_histogram,
-)
+from graphrole_spark.operators.binning import capped_melt, chunked_bin_boundaries
 from graphrole_spark.oracle.binning import bin_boundaries
 
 
-def _exact_and_chunked(spark, values, cap, frac=0.5):
-    pdf = pd.DataFrame({"v": np.asarray(values, dtype=float)})
-    df = spark.createDataFrame(pdf).persist()
+def _exact_and_chunked(spark, values, cap):
+    values = np.asarray(values, dtype=float)
+    exact = bin_boundaries(*np.unique(values, return_counts=True))
+    df = spark.createDataFrame(pd.DataFrame({"v": values})).persist()
     try:
-        (uniq, counts) = melt_histogram(df, ["v"])["v"]
-        exact = bin_boundaries(uniq, counts, frac=frac)
-
-        complete, truncated = capped_melt(df, ["v"], cap)
-        if "v" in complete:
-            u, c = complete["v"]
-            got = bin_boundaries(u, c, frac=frac)
-        else:
-            u, c, total = truncated["v"]
-            assert len(u) == cap  # first chunk really is capped
-            got = chunked_bin_boundaries(df, "v", total, (u, c), frac=frac, cap=cap)
+        hist = capped_melt(df, ["v"], cap)["v"]
+        uniq, _counts, total = hist
+        assert total == len(values)
+        assert len(uniq) == min(cap, len(np.unique(values)))  # capped chunk
+        got = chunked_bin_boundaries(df, "v", hist, cap)
         return exact, got
     finally:
         df.unpersist()
@@ -51,6 +42,28 @@ def _exact_and_chunked(spark, values, cap, frac=0.5):
 def test_chunked_boundaries_equal_exact(spark, values, cap):
     exact, got = _exact_and_chunked(spark, values, cap)
     assert np.array_equal(exact, got), (values, cap)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    values=st.lists(
+        st.one_of(  # small integers tie often, floats rarely
+            st.integers(min_value=-20, max_value=20).map(float),
+            st.floats(min_value=-1e6, max_value=1e6, allow_nan=False),
+        ),
+        min_size=0,
+        max_size=200,
+    ),
+)
+def test_complete_histogram_needs_no_frame(values):
+    """A complete first chunk resolves every boundary driver-side: with
+    no frame to fetch from (``features=None``) the result still equals
+    the oracle's, dtype included."""
+    uniq, counts = np.unique(np.asarray(values, dtype=float), return_counts=True)
+    exact = bin_boundaries(uniq, counts)
+    got = chunked_bin_boundaries(None, "v", (uniq, counts, int(counts.sum())))
+    assert got.dtype == exact.dtype
+    assert np.array_equal(exact, got), values
 
 
 def test_high_cardinality_falls_back_and_matches(spark):

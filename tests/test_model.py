@@ -74,6 +74,32 @@ def test_model_from_checkpoint(spark, tmp_path, turns):
     assert restored.boundaries == model.boundaries
 
 
+def test_resumed_fit_model_equals_straight_fit(spark, tmp_path):
+    """A fit killed after generation 1 and resumed to depth 4 yields the
+    same frozen model as a straight depth-4 fit — boundaries of the
+    columns generated before the resume included."""
+    import json
+
+    from graphrole_spark.operators.recursion import RecursiveFeatureExtractor
+
+    t = synthesize_transcripts(spark, 25, seed=11).persist()
+    ck = str(tmp_path / "ck")
+    fit_transcript_features(t, max_generations=2, checkpoint_dir=ck)
+    manifest_path = f"{ck}/_lineage.json"
+    with open(manifest_path) as fh:
+        manifest = json.load(fh)
+    manifest["done"] = False
+    with open(manifest_path, "w") as fh:
+        json.dump(manifest, fh)
+    resumed = RecursiveFeatureExtractor.resume(spark, ck, max_generations=4)
+    _, straight = fit_transcript_features(t, max_generations=4)
+    t.unpersist()
+    generated = {c for e in resumed.lineage for c in e["retained"] + e["dropped"]}
+    assert set(resumed.fitted_model().boundaries) == generated
+    assert resumed.fitted_model().to_dict() == straight.to_dict()
+    assert FeatureModel.from_checkpoint(ck).to_dict() == straight.to_dict()
+
+
 def test_incremental_update_equals_full_transform(spark, turns):
     # split: the last 3 turns of every 4th conversation arrive "later"
     last3 = F.col("turn_idx") >= F.col("__n") - 3

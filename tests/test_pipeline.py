@@ -111,7 +111,6 @@ def test_checkpoint_resume_chain_blocked(spark, transcripts, tmp_path):
     )
     rfe = RecursiveFeatureExtractor(
         seed_frame=seeds, chain_keys=("conv_id", "turn_idx"),
-        chain_block_col="__blk", chain_own_col="__own",
         max_generations=3, checkpoint_dir=ckpt,
     )
     expected = (
@@ -403,6 +402,20 @@ def test_with_chain_blocks_guards(spark):
     assert len(own) == seeds.count()  # every source row owned exactly once
     # halo copies are bounded: at most 2 extra copies per row
     assert len(out) <= 3 * len(own)
+
+
+def test_blocked_mode_needs_both_marker_columns(spark):
+    """Blocked chain mode is read from the seed frame: the block and
+    owner columns come together or not at all."""
+    from graphrole_spark.pipeline import with_chain_blocks, chain_seed_features
+
+    seeds = chain_seed_features(synthesize_transcripts(spark, 3, seed=1))
+    blocked = with_chain_blocks(seeds, block_size=8, halo=2)
+    for half in (blocked.drop("__blk"), blocked.drop("__own")):
+        with pytest.raises(ValueError, match="blocked chain mode"):
+            RecursiveFeatureExtractor(
+                seed_frame=half, chain_keys=("conv_id", "turn_idx")
+            )
 
 
 def test_chain_attribute_include_exclude(spark, transcripts):

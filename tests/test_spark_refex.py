@@ -266,8 +266,7 @@ def test_chain_lookahead_two_rounds_at_depth_4(spark, monkeypatch):
     cap = recursion.HISTOGRAM_CAP
     expected, plain = fit(cap, seed_frame=seeds)
     for got, out in (
-        fit(cap, seed_frame=with_chain_blocks(seeds, block_size=8, halo=3),
-            chain_block_col="__blk", chain_own_col="__own"),
+        fit(cap, seed_frame=with_chain_blocks(seeds, block_size=8, halo=3)),
         fit(5, seed_frame=seeds),
     ):
         assert got == expected

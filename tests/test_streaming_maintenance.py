@@ -13,6 +13,7 @@ import os
 import shutil
 
 import pandas as pd
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -147,6 +148,22 @@ def test_apply_delta_idempotent_under_replay(spark, tmp_path):
     pd.testing.assert_frame_equal(once, twice)
     expected = _sorted(transform_transcript_features(full, model))
     pd.testing.assert_frame_equal(twice, expected)
+
+
+def test_apply_delta_rejects_other_n_buckets(spark, tmp_path):
+    """``n_buckets`` is pinned at bootstrap: a delta bucketed differently
+    would land conversations in partitions the store never reads back.
+    A fresh bootstrap rewrites the store and re-pins."""
+    base = synthesize_transcripts(spark, 10, seed=3)
+    _, model = fit_transcript_features(base, max_generations=2)
+    store = str(tmp_path / "store")
+    bootstrap_feature_store(spark, base, model, store, n_buckets=4)
+    before = _sorted(read_features(spark, store))
+    with pytest.raises(ValueError, match="n_buckets"):
+        apply_delta(spark, base.limit(3), model, store, n_buckets=8)
+    pd.testing.assert_frame_equal(_sorted(read_features(spark, store)), before)
+    bootstrap_feature_store(spark, base, model, store, n_buckets=8)
+    apply_delta(spark, base.limit(0), model, store, n_buckets=8)
 
 
 def test_apply_delta_restores_interrupted_compaction(spark, tmp_path):
